@@ -29,14 +29,17 @@ object Pipeline {
     val expanded =
       if (strict) IntervalExpand.strict(readings)
       else IntervalExpand.faithful(readings)
-    val out = expanded.cache()
-    val n = out.count()
     val ingestDate = Sources.filenameDate(
       new org.apache.hadoop.fs.Path(latest).getName).get.toString
-    if (idempotent) Sinks.writeIdempotent(out, targetDir, ingestDate)
-    else Sinks.writeAppend(out, targetDir)
-    out.unpersist()
-    n
+    // unpersist on every exit: a failed write must not pin one more
+    // amplified copy per retry attempt for the life of the JVM
+    val out = expanded.cache()
+    try {
+      val n = out.count()
+      if (idempotent) Sinks.writeIdempotent(out, targetDir, ingestDate)
+      else Sinks.writeAppend(out, targetDir)
+      n
+    } finally out.unpersist()
   }
 
   /** Step Functions `.sync` retry-or-fail analogue (the reference's state
@@ -114,10 +117,11 @@ object Pipeline {
       val expanded =
         (if (strict) IntervalExpand.strict(readings)
          else IntervalExpand.faithful(readings)).cache()
-      rows += expanded.count()
-      Sinks.writeIdempotent(expanded, targetDir, date.toString)
-      Ledger.record(spark, ledgerDir, newFiles)
-      expanded.unpersist()
+      try {
+        rows += expanded.count()
+        Sinks.writeIdempotent(expanded, targetDir, date.toString)
+        Ledger.record(spark, ledgerDir, newFiles)
+      } finally expanded.unpersist()
     }
     (byDate.flatMap(_._2.map(_._2)), rows)
   }

@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * "Connected Components in MapReduce and Beyond", SoCC'14), whose
   * per-round dataflow is this same join+min shape.
   *
-  * Substrate: this is the library's one deliberate RDD loop. A DataFrame
+  * Substrate: an RDD loop, like [[Bfs]], [[KCore]] and [[Lpa]]. A DataFrame
   * fixpoint builds brand-new logical plans every round, and each round
   * pays Catalyst analysis + whole-stage-codegen compilation for plans
   * that execute once — measured at ~0.5 s/job × ~9 jobs/round on a

@@ -142,8 +142,9 @@ object KCore {
     * Every CTE is AS MATERIALIZED: each round references the previous
     * survivor set TWICE (one join per endpoint) and the edge table once,
     * so DuckDB's default inlining re-expands the whole chain 2^rounds
-    * times — the Bpe-oracle blowup shape, and the exact SQL mirror of
-    * why the Spark loop localCheckpoints per round. */
+    * times — the Bpe-oracle blowup shape, and the SQL mirror of the
+    * analyzed-plan doubling a lazy Catalyst loop would hit (see [[peel]];
+    * the RDD loop's lineage is a DAG and needs no per-round cut). */
   def oracleSql(edgesSql: String, k: Int, rounds: Int): String = {
     val roundCtes = (1 to rounds).map { r =>
       s"""a$r AS MATERIALIZED (SELECT e.src AS id FROM edges e

@@ -1046,8 +1046,7 @@ object Relational {
     // under-iterate; the executed round count is recorded per corpus and
     // the oracle replays exactly those rounds. Per round one
     // vertex-sized join + min-combine agg against the once-partitioned
-    // edge list, localCheckpointed (the KCore doubled-reference
-    // contract).
+    // edge list, run as an RDD loop (see ops.Bfs).
     "q_graph_bfs" -> ((s, dir) => {
       val pairs = coPurchasePairs(s, dir)
         .filter(col("w") >= 2).select("src", "dst")

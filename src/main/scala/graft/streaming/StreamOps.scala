@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
+  GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming analogues of the batch operators, modeling the
@@ -28,27 +28,94 @@ object StreamOps {
     * watermark advancement, not one end-of-query batch. */
   val DefaultChunks = 4
 
-  /** Staged-directory memo, keyed by (canonical source path, chunks).
-    * The staged tree is IMMUTABLE once built — file-stream sources are
-    * read-only consumers with per-query checkpoints, so every stream over
-    * the same input can share one staging (a bench pass invokes ~10
-    * streaming queries x several passes; re-staging each time would pay
-    * the split read+write ~40x per run for identical bytes). Concurrent
-    * first-callers are serialized per key by computeIfAbsent.
+  /** Staged-directory memo of [[staged]], keyed by (canonical source
+    * path, slice, chunks). The staged tree is IMMUTABLE once built —
+    * file-stream sources are read-only consumers with per-query
+    * checkpoints, so every stream over the same input can share one
+    * staging (a bench pass invokes ~10 streaming queries x several
+    * passes; re-staging each time would pay the split read+write ~40x per
+    * run for identical bytes). Concurrent first-callers are serialized
+    * per key by computeIfAbsent.
     *
     * Known hazards, acceptable for the sequential bench/test usage:
     * (1) the memo is JVM-scoped — two concurrent JVMs over the same source
     * each build their own staging (duplicate bytes, benign: stagings are
-    * per-JVM temp dirs, never shared across processes); (2) staging
-    * mutates the shared session conf (the nanos read flag is set then
-    * restored inside the computeIfAbsent body), so an unrelated query on
-    * the SAME SparkSession running concurrently with a first staging could
-    * observe the flipped flag, and two concurrent first-callers with
-    * DIFFERENT sources interleave set/restore. Driving StreamOps from
+    * per-JVM temp dirs, never shared across processes); (2) staging runs
+    * batch jobs on the shared session, and the first events staging sets
+    * the nanos read flag session-wide through `Sources.eventsRawNanos`,
+    * which leaves it set (TESTDATA.md). Nothing here sets or restores
+    * that flag: the staged chunks are plain INT64 read under an explicit
+    * LongType schema, so no stream depends on it. Driving StreamOps from
     * concurrent threads on one session would need a session-level lock
     * around staging. */
   private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), String]()
+
+  /** Stages `source` (built only on a memo miss) under a fresh temp dir as
+    * `chunks` single-file drops split into equal-width ranges of the
+    * integral `keyCol`, with ascending modification times in range order,
+    * and returns the dir. Chunk boundaries are lo + step*i with
+    * step = (hi − lo) / chunks in integer math, last chunk inclusive of
+    * hi — the exact formula the generated oracles mirror. With
+    * `tagArrival` each file carries its chunk ordinal as an
+    * `arrival_batch` column.
+    *
+    * One batch read, `chunks` range-filtered single-file writes (the
+    * chunks=1 degenerate case is one full-range write — a raw file copy
+    * would be cheaper but silently stages an EMPTY directory when the
+    * source is a Spark-written dataset dir rather than a single parquet
+    * file, so the read path is used for both). A ZERO-ROW source leaves
+    * the dir empty — the stream simply runs zero batches. Rows whose key
+    * is entirely null are a different, corrupt case: range staging would
+    * silently drop every row, so it fails loudly instead. TempDirs
+    * registers a RECURSIVE delete-at-exit — File.deleteOnExit is a silent
+    * no-op on non-empty dirs, which previously leaked ~10 staged copies
+    * per bench pass until the filesystem was cleaned externally. */
+  private def staged(src: java.io.File, slice: String, chunks: Int,
+                     keyCol: String, tagArrival: Boolean)
+                    (source: => DataFrame): String =
+    stagedDirs.computeIfAbsent((src.getCanonicalPath, slice, math.max(chunks, 1)), { _ =>
+      val stage = graft.io.TempDirs.createDeletedOnExit("graft_stream_src_")
+      val nChunks = math.max(chunks, 1)
+      val d = source
+      val b = d.agg(min(keyCol), max(keyCol), count(lit(1))).head()
+      require(b.getLong(2) == 0L || !b.isNullAt(0),
+        s"staging source $src has ${b.getLong(2)} rows but $keyCol is " +
+          "entirely null; range staging would drop them all")
+      val (lo, hi) =
+        if (b.isNullAt(0)) (0L, -1L) else (b.getLong(0), b.getLong(1))
+      val step = (hi - lo) / nChunks
+      val mtimeBase = 1000000000000L // fixed epoch-ms base; only ORDER matters
+      for (i <- 0 until (if (hi < lo) 0 else nChunks)) {
+        val lower = lo + step * i
+        val upper = if (i == nChunks - 1) hi + 1 else lo + step * (i + 1)
+        val tmpOut = new java.io.File(stage, s"_chunk_$i")
+        val chunk = d.filter(col(keyCol) >= lower && col(keyCol) < upper)
+        (if (tagArrival) chunk.withColumn("arrival_batch", lit(i.toLong)) else chunk)
+          .coalesce(1).write.parquet(tmpOut.getAbsolutePath)
+        val part = tmpOut.listFiles().filter(_.getName.endsWith(".parquet"))
+        require(part.length <= 1,
+          s"chunk $i staged ${part.length} part files, expected at most 1")
+        // an empty range (all keys on one value, or fewer distinct keys
+        // than chunks) writes no part file — skip it; the stream simply
+        // runs fewer batches
+        part.headOption.foreach { p =>
+          val chunkFile = new java.io.File(stage, f"chunk_$i%05d.parquet")
+          java.nio.file.Files.move(p.toPath, chunkFile.toPath)
+          // ascending mtimes: the file source processes oldest-first, so
+          // batch order == key order regardless of listing order. A
+          // filesystem that rejects setLastModified would silently fall
+          // back to creation-order listing, letting events arrive below
+          // the watermark — fail loudly at staging time instead.
+          require(chunkFile.setLastModified(mtimeBase + i * 60000L),
+            s"setLastModified failed on $chunkFile; chunk ordering " +
+              "would not match event time and watermark semantics " +
+              "would silently corrupt")
+        }
+        org.apache.commons.io.FileUtils.deleteDirectory(tmpOut)
+      }
+      stage.getAbsolutePath
+    })
 
   /** File-source stream over the events parquet (ns timestamps → micros).
     * The file-stream source requires a *directory*, so the input is staged
@@ -76,68 +143,13 @@ object StreamOps {
   def eventsStream(s: SparkSession, dir: String,
                    chunks: Int = DefaultChunks): DataFrame = {
     val src = new java.io.File(dir, "events.parquet")
-    // One staging per (source, chunks) per JVM, built under computeIfAbsent
-    // (unique temp dir per key — distinct datasets can never share or race
-    // a staging path; a memo hit reuses identical immutable bytes).
-    // TempDirs registers a RECURSIVE delete-at-exit — File.deleteOnExit is
-    // a silent no-op on non-empty dirs, which previously leaked ~10 staged
-    // copies per bench pass until the filesystem was cleaned externally.
-    val stagePath = stagedDirs.computeIfAbsent(
-      (src.getCanonicalPath, math.max(chunks, 1)), { _ =>
-        val stage = graft.io.TempDirs.createDeletedOnExit("graft_stream_src_")
-        // One batch read, `chunks` range-filtered single-file writes (the
-        // chunks=1 degenerate case is one full-range write — a raw file
-        // copy would be cheaper but silently stages an EMPTY directory
-        // when the source is a Spark-written dataset dir rather than a
-        // single parquet file, so the read path is used for both).
-        // `eventsRawNanos` absorbs whatever parquet layout the source
-        // carries (NANOS, MICROS-NTZ, raw INT64); the rewritten chunks
-        // always carry plain INT64 nanos, so the stream itself never
-        // depends on the source layout or session state.
-        val nChunks = math.max(chunks, 1)
-        locally {
-          val ev = graft.io.Sources.eventsRawNanos(s, src.getAbsolutePath)
-          val b = ev.agg(min("ts"), max("ts"), count(lit(1))).head()
-          // a ZERO-ROW source has null min/max: leave the staging dir
-          // empty — the stream simply runs zero batches. Rows whose ts is
-          // all-null are a different, corrupt case: chronological staging
-          // would silently drop every row, so fail loudly instead.
-          require(b.getLong(2) == 0L || !b.isNullAt(0),
-            s"events source $src has ${b.getLong(2)} rows but ts is " +
-              "entirely null; chronological staging would drop them all")
-          val (lo, hi) =
-            if (b.isNullAt(0)) (0L, -1L) else (b.getLong(0), b.getLong(1))
-          val mtimeBase = 1000000000000L // fixed epoch-ms base; only ORDER matters
-          for (i <- 0 until (if (hi < lo) 0 else nChunks)) {
-            val lower = lo + (hi - lo) / nChunks * i
-            val upper = if (i == nChunks - 1) hi + 1 else lo + (hi - lo) / nChunks * (i + 1)
-            val tmpOut = new java.io.File(stage, s"_chunk_$i")
-            ev.filter(col("ts") >= lower && col("ts") < upper)
-              .coalesce(1).write.parquet(tmpOut.getAbsolutePath)
-            val part = tmpOut.listFiles().filter(_.getName.endsWith(".parquet"))
-            require(part.length <= 1,
-              s"chunk $i staged ${part.length} part files, expected at most 1")
-            // a degenerate time range (all events on one timestamp, or
-            // fewer distinct instants than chunks) leaves middle chunks
-            // empty — skip them; the stream simply runs fewer batches
-            part.headOption.foreach { p =>
-              val chunkFile = new java.io.File(stage, f"chunk_$i%05d.parquet")
-              java.nio.file.Files.move(p.toPath, chunkFile.toPath)
-              // ascending mtimes: the file source processes oldest-first, so
-              // batch order == event-time order regardless of listing order.
-              // A filesystem that rejects setLastModified would silently
-              // fall back to creation-order listing, letting events arrive
-              // below the watermark — fail loudly at staging time instead.
-              require(chunkFile.setLastModified(mtimeBase + i * 60000L),
-                s"setLastModified failed on $chunkFile; chunk ordering " +
-                  "would not match event time and watermark semantics " +
-                  "would silently corrupt")
-            }
-            org.apache.commons.io.FileUtils.deleteDirectory(tmpOut)
-          }
-        }
-        stage.getAbsolutePath
-      })
+    // `eventsRawNanos` absorbs whatever parquet layout the source carries
+    // (NANOS, MICROS-NTZ, raw INT64); the rewritten chunks always carry
+    // plain INT64 nanos, so the stream itself never depends on the source
+    // layout or session state.
+    val stagePath = staged(src, "events", chunks, "ts", tagArrival = false) {
+      graft.io.Sources.eventsRawNanos(s, src.getAbsolutePath)
+    }
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -148,23 +160,47 @@ object StreamOps {
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
   }
 
-  /** Run a streaming DF to completion (AvailableNow) into a memory sink.
+  /** Sets each of `kv` on the session for the duration of `body`, then
+    * puts every key back to its prior value — or unsets it if it was
+    * unset — also when `body` throws. */
+  private def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Checkpoint-manager selection (r17, measured in R17FsLatencyProbe /
+    * scaladoc of [[NioCheckpointFileManager]]): every [[ckpt]] location
+    * is a local POSIX path by construction (TempDirs.base is a
+    * java.nio Path), and on local paths the default FileContext manager
+    * pays ~45 ms of no-native-hadoop shell forks PER atomic write —
+    * ~19 such writes per micro-batch once the per-partition state-store
+    * delta commits are counted. The nio manager is the correct local
+    * implementation of the same protocol (hidden temp + atomic rename);
+    * a deployment checkpointing to HDFS/S3 must NOT set this key — its
+    * TempDirs/ckpt seam would not be a local path in the first place. */
+  private val CfmConfKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** The short-run policy every stream run here executes `body` under.
     *
     * Stateful operators allocate one state store per shuffle partition,
     * each with per-batch checkpoint file IO — for a short AvailableNow
     * run (4 chunked micro-batches here) that fixed cost dominates, so the
-    * stream runs with a reduced partition count (state here is tiny; a
+    * stream runs with 4 shuffle/state partitions (state here is tiny; a
     * long-lived production stream with real state volume would keep the
-    * session default). The session values are restored after the query
-    * terminates.
-    *
-    * The legacy `nanosAsLong` conf (required to scan the TIMESTAMP(NANOS)
-    * events parquet — there is no per-read option for it) is scoped here
-    * rather than set-and-leaked by [[eventsStream]]: parquet scans re-read
-    * SQLConf per micro-batch, so termination is the earliest safe restore
-    * point.
-    */
-  private val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
+    * session default), the nio checkpoint manager, and `provider` as the
+    * state store when one is given. Per-run invariants a caller hoists
+    * out of its micro-batch loop are built inside `body`, so a throw
+    * there still restores the session. */
+  private def shortRun[T](s: SparkSession, provider: Option[String] = None)
+                         (body: => T): T =
+    withConf(s, Seq("spark.sql.shuffle.partitions" -> "4",
+        CfmConfKey -> classOf[NioCheckpointFileManager].getName) ++
+      provider.map(RocksDbProviderConf._1 -> _): _*)(body)
 
   /** Explicit per-query checkpoint dir under [[graft.io.TempDirs.base]].
     * Left unset, Spark creates the temp checkpoint under
@@ -180,29 +216,20 @@ object StreamOps {
   private def ckpt(): String =
     graft.io.TempDirs.createDeletedOnExit("graft_ckpt_").getAbsolutePath
 
-  /** Checkpoint-manager selection (r17, measured in R17FsLatencyProbe /
-    * scaladoc of [[NioCheckpointFileManager]]): every [[ckpt]] location
-    * is a local POSIX path by construction (TempDirs.base is a
-    * java.nio Path), and on local paths the default FileContext manager
-    * pays ~45 ms of no-native-hadoop shell forks PER atomic write —
-    * ~19 such writes per micro-batch once the per-partition state-store
-    * delta commits are counted. The nio manager is the correct local
-    * implementation of the same protocol (hidden temp + atomic rename);
-    * a deployment checkpointing to HDFS/S3 must NOT set this key — its
-    * TempDirs/ckpt seam would not be a local path in the first place.
-    * Scoped set/restore around each stream run, like the partition and
-    * nanos confs. */
-  private val CfmConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private def setNioCkptManager(s: SparkSession): Option[String] = {
-    val prev = s.conf.getOption(CfmConfKey)
-    s.conf.set(CfmConfKey, classOf[NioCheckpointFileManager].getName)
-    prev
-  }
-  private def restoreCkptManager(s: SparkSession, prev: Option[String]): Unit =
-    prev match {
-      case Some(v) => s.conf.set(CfmConfKey, v)
-      case None => s.conf.unset(CfmConfKey)
-    }
+  /** Starts `writer` on a fresh [[ckpt]] under an AvailableNow trigger
+    * and blocks until it has processed everything currently staged. */
+  private def runAvailableNow(writer: DataStreamWriter[Row]): Unit =
+    writer.option("checkpointLocation", ckpt())
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** The idempotent foreachBatch write: `df` tagged with `id` and
+    * dynamic-overwritten into its own `batch_id=` partition of `sink`, so
+    * a replayed batch replaces exactly its own output. */
+  private def writeBatch(df: DataFrame, id: Long, sink: String): Unit =
+    df.withColumn("batch_id", lit(id))
+      .write.partitionBy("batch_id")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").parquet(sink)
 
   /** Spark's disk-backed state store. The default (HDFS-backed) provider
     * keeps every store's working state ON HEAP — fine for these demo
@@ -246,40 +273,17 @@ object StreamOps {
       case _ => None
     }
 
-  /** Runs a stream to a memory sink. `stateStoreProvider = None` means
-    * the session default (in-memory unless the deployment knob above is
-    * set); `Some(provider)` pins one for queries that mandate it. */
+  /** Runs a stream to completion (AvailableNow) into a memory sink under
+    * [[shortRun]]. `stateStoreProvider = None` means the session default
+    * (in-memory unless the deployment knob above is set);
+    * `Some(provider)` pins one for queries that mandate it. */
   def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String,
                  stateStoreProvider: Option[String] = DefaultStateProvider): DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNanos = s.conf.get(NanosConf)
-    val providerKey = RocksDbProviderConf._1
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set(NanosConf, "true")
-    stateStoreProvider.foreach(s.conf.set(providerKey, _))
-    val prevCfm = setNioCkptManager(s)
-    try {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set(NanosConf, prevNanos)
-      restoreCkptManager(s, prevCfm)
-      if (stateStoreProvider.isDefined) prevProvider match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+    shortRun(s, stateStoreProvider) {
+      runAvailableNow(df.writeStream.format("memory").queryName(name).outputMode(mode))
     }
     s.table(name)
   }
-
-  /** Staged-docs memo for [[newDocsStream]] — same lifecycle and hazards
-    * as [[stagedDirs]]. */
-  private val docStagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), String]()
 
   /** File-source stream of "newly arriving" documents: the `doc_id %
     * modulus == residue` slice of the documents table staged as `chunks`
@@ -292,52 +296,55 @@ object StreamOps {
     * column. That — not the runtime batchId — is what downstream sinks
     * should key on: if a range chunk happens to be EMPTY its file is
     * never written and the engine's batch ids compact, but the embedded
-    * ordinal (and the id-range arithmetic an oracle replays) is
-    * unaffected. Chunk boundaries are lo + step*i with
-    * step = (hi − lo) / chunks in integer math, last chunk inclusive of
-    * hi — the exact formula the generated oracle mirrors. */
+    * ordinal (and the id-range arithmetic an oracle replays, see
+    * [[staged]]) is unaffected. */
   def newDocsStream(s: SparkSession, dir: String, modulus: Int, residue: Int,
                     chunks: Int = DefaultChunks): DataFrame = {
     val src = new java.io.File(dir, "documents.parquet")
-    val stagePath = docStagedDirs.computeIfAbsent(
-      (src.getCanonicalPath, modulus, residue, math.max(chunks, 1)), { _ =>
-        val stage = graft.io.TempDirs.createDeletedOnExit("graft_stream_docs_")
-        val nChunks = math.max(chunks, 1)
-        val d = s.read.parquet(src.getAbsolutePath)
-          .where(col("doc_id") % modulus === residue)
-          .select(col("doc_id"), col("text"))
-        val b = d.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-        if (b.getLong(2) > 0L) {
-          val (lo, hi) = (b.getLong(0), b.getLong(1))
-          val step = (hi - lo) / nChunks
-          val mtimeBase = 1000000000000L
-          for (i <- 0 until nChunks) {
-            val lower = lo + step * i
-            val upper = if (i == nChunks - 1) hi + 1 else lo + step * (i + 1)
-            val tmpOut = new java.io.File(stage, s"_chunk_$i")
-            d.filter(col("doc_id") >= lower && col("doc_id") < upper)
-              .withColumn("arrival_batch", lit(i.toLong))
-              .coalesce(1).write.parquet(tmpOut.getAbsolutePath)
-            val part = tmpOut.listFiles().filter(_.getName.endsWith(".parquet"))
-            require(part.length <= 1,
-              s"doc chunk $i staged ${part.length} part files, expected at most 1")
-            part.headOption.foreach { p =>
-              val chunkFile = new java.io.File(stage, f"chunk_$i%05d.parquet")
-              java.nio.file.Files.move(p.toPath, chunkFile.toPath)
-              require(chunkFile.setLastModified(mtimeBase + i * 60000L),
-                s"setLastModified failed on $chunkFile")
-            }
-            org.apache.commons.io.FileUtils.deleteDirectory(tmpOut)
-          }
-        }
-        stage.getAbsolutePath
-      })
+    val stagePath = staged(src, s"doc_id % $modulus = $residue", chunks,
+        "doc_id", tagArrival = true) {
+      // null ids stay in the slice so the stager refuses an all-null key
+      // instead of staging an empty landing dir
+      s.read.parquet(src.getAbsolutePath)
+        .where(col("doc_id").isNull || col("doc_id") % modulus === residue)
+        .select(col("doc_id"), col("text"))
+    }
     s.readStream
       .schema(StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("arrival_batch", LongType))))
       .option("maxFilesPerTrigger", "1")
       .parquet(stagePath)
+  }
+
+  /** The shell the streaming document gates share: runs the
+    * `doc_id % 5 == 0` new-docs stream under [[shortRun]] into a fresh
+    * `prefix` sink dir, and returns the sink read back under an explicit
+    * schema (`batch_id` plus `cols`), so an all-empty run yields an empty
+    * frame instead of an inference error. `prepare` builds the per-run
+    * invariants inside the scope and returns the per-batch step, which
+    * gets each non-empty batch (without its ordinal column) and a writer
+    * that keys the output on the staged `arrival_batch` ordinal — not the
+    * runtime batch id, so it is stable under empty-chunk compaction and
+    * replay. */
+  private def docsGate(s: SparkSession, dir: String, prefix: String,
+                       cols: StructField*)
+                      (prepare: => (DataFrame, DataFrame => Unit) => Unit): DataFrame = {
+    val stream = newDocsStream(s, dir, modulus = 5, residue = 0)
+    val sink = graft.io.TempDirs.createDeletedOnExit(prefix).getAbsolutePath
+    shortRun(s) {
+      val step = prepare
+      runAvailableNow(stream.writeStream.foreachBatch {
+        (batch: Dataset[Row], _: Long) =>
+          if (!batch.isEmpty) {
+            val ab = batch.agg(min("arrival_batch")).head().getLong(0)
+            step(batch.drop("arrival_batch"), writeBatch(_, ab, sink))
+          }
+      })
+    }
+    s.read.schema(StructType(cols :+ StructField("batch_id", LongType)))
+      .parquet(sink)
+      .select("batch_id", cols.map(_.name): _*)
   }
 
   /** STREAMING ingest dedup — the incremental-dedup loop's probe step as
@@ -355,54 +362,21 @@ object StreamOps {
     * accretes, keeping total dedup work linear in corpus size. */
   def dedupIngest(s: SparkSession, dir: String, indexPath: String): DataFrame = {
     import graft.ops.Dedup
-    val stream = newDocsStream(s, dir, modulus = 5, residue = 0)
-    val sink = graft.io.TempDirs.createDeletedOnExit("graft_stream_dedup_")
-      .getAbsolutePath
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val prevCfm = setNioCkptManager(s)
-    try {
+    docsGate(s, dir, "graft_stream_dedup_", StructField("id_new", LongType),
+        StructField("id_corpus", LongType), StructField("jac", DoubleType)) {
       // per-batch INVARIANTS, hoisted out of the micro-batch loop (r17,
       // guide §2.4): the signature index is validated + loaded ONCE per
       // run and lineage-truncated — every batch previously re-planned and
       // re-scanned the index parquet for its probe join. Built inside the
       // timed region per invocation; the probe join itself is unchanged.
-      // Inside the try: both steps can throw (param mismatch, missing
-      // path — localCheckpoint runs an eager job), and the finally must
-      // still restore the session's shuffle width.
       Dedup.validateIndexParams(s, indexPath, 3, 32, 8)
       val index = s.read.parquet(indexPath).localCheckpoint()
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val q = stream.writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
-            if (!batch.isEmpty) {
-              // key the sink on the staged ordinal, not the runtime batch
-              // id — stable under empty-chunk compaction and replay
-              val ab = batch.agg(min("arrival_batch")).head().getLong(0)
-              val cands = Dedup.incrementalCandidatePairsAgainst(
-                index, batch.drop("arrival_batch"), "doc_id", "text")
-              Dedup.verifyCandidatesScoped(docs, "doc_id", "text",
-                  cands, "id_new", "id_corpus")
-                .withColumn("batch_id", lit(ab))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite").parquet(sink)
-            }
-        }
-        .option("checkpointLocation", ckpt())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      restoreCkptManager(s, prevCfm)
+      (batch, write) =>
+        write(Dedup.verifyCandidatesScoped(docs, "doc_id", "text",
+          Dedup.incrementalCandidatePairsAgainst(index, batch, "doc_id", "text"),
+          "id_new", "id_corpus"))
     }
-    s.read.schema(StructType(Seq(
-        StructField("id_new", LongType), StructField("id_corpus", LongType),
-        StructField("jac", DoubleType), StructField("batch_id", LongType))))
-      .parquet(sink)
-      .select("batch_id", "id_new", "id_corpus", "jac")
   }
 
   /** Streaming distribution-drift gate — `q_text_kl_drift`'s monitor run
@@ -418,70 +392,41 @@ object StreamOps {
     * the only per-batch aggregations are bucket-count sized. Micro-nat
     * quantization before the exact long sum, as the batch query. */
   def driftGate(s: SparkSession, dir: String,
-                ref: graft.queries.TextQueries.KlRef): DataFrame = {
-    val stream = newDocsStream(s, dir, modulus = 5, residue = 0)
-    val sink = graft.io.TempDirs.createDeletedOnExit("graft_stream_drift_")
-      .getAbsolutePath
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val prevCfm = setNioCkptManager(s)
-    try {
-      val q = stream.writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
-            if (!batch.isEmpty) {
-              val ab = batch.agg(min("arrival_batch")).head().getLong(0)
-              // persisted: cs feeds BOTH the marginal join and the tot_b
-              // aggregate — without it each micro-batch tokenizes and
-              // aggregates its documents twice (review catch); it is
-              // bucket-count sized (<= K+1 rows), so the cache is free
-              val cs = batch
-                .select(explode(split(lower(col("text")), "[^a-z0-9]+"))
-                  .as("term"))
-                .filter(col("term") =!= "")
-                .withColumn("bucket",
-                  when(col("term").isin(ref.kept: _*), col("term"))
-                    .otherwise(lit("<oov>")))
-                .groupBy("bucket").agg(count(lit(1)).as("cs"))
-                .persist()
-              try {
-                val refDf = s.createDataFrame(ref.buckets).toDF("bucket", "cc")
-                cs.join(refDf, "bucket")
-                  .crossJoin(cs.agg(sum("cs").as("tot_b")))
-                  .withColumn("contrib", floor(
-                    (col("cs").cast("double") / col("tot_b")) *
-                      log((col("cs").cast("double") * ref.totC) /
-                        (col("tot_b").cast("double") * col("cc"))) *
-                      1000000d + 0.5d).cast("long"))
-                  .agg(count(lit(1)).as("n_buckets"),
-                    sum("cs").as("tot_tok"), sum("contrib").as("kl_micro"))
-                  // a batch whose EVERY bucket misses the reference (all
-                  // novel tokens, no reference <oov> mass) must emit NO
-                  // row — the oracle's GROUP BY over the inner join
-                  // produces none; without this filter the global agg
-                  // still returns one degenerate all-null row
-                  .where(col("n_buckets") > 0)
-                  .withColumn("batch_id", lit(ab))
-                  .write.partitionBy("batch_id")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .mode("overwrite").parquet(sink)
-              } finally cs.unpersist()
-            }
-        }
-        .option("checkpointLocation", ckpt())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      restoreCkptManager(s, prevCfm)
+                ref: graft.queries.TextQueries.KlRef): DataFrame =
+    docsGate(s, dir, "graft_stream_drift_", StructField("n_buckets", LongType),
+        StructField("tot_tok", LongType), StructField("kl_micro", LongType)) {
+      (batch, write) =>
+        // persisted: cs feeds BOTH the marginal join and the tot_b
+        // aggregate — without it each micro-batch tokenizes and
+        // aggregates its documents twice (review catch); it is
+        // bucket-count sized (<= K+1 rows), so the cache is free
+        val cs = batch
+          .select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("term"))
+          .filter(col("term") =!= "")
+          .withColumn("bucket",
+            when(col("term").isin(ref.kept: _*), col("term"))
+              .otherwise(lit("<oov>")))
+          .groupBy("bucket").agg(count(lit(1)).as("cs"))
+          .persist()
+        try {
+          val refDf = s.createDataFrame(ref.buckets).toDF("bucket", "cc")
+          write(cs.join(refDf, "bucket")
+            .crossJoin(cs.agg(sum("cs").as("tot_b")))
+            .withColumn("contrib", floor(
+              (col("cs").cast("double") / col("tot_b")) *
+                log((col("cs").cast("double") * ref.totC) /
+                  (col("tot_b").cast("double") * col("cc"))) *
+                1000000d + 0.5d).cast("long"))
+            .agg(count(lit(1)).as("n_buckets"),
+              sum("cs").as("tot_tok"), sum("contrib").as("kl_micro"))
+            // a batch whose EVERY bucket misses the reference (all novel
+            // tokens, no reference <oov> mass) must emit NO row — the
+            // oracle's GROUP BY over the inner join produces none;
+            // without this filter the global agg still returns one
+            // degenerate all-null row
+            .where(col("n_buckets") > 0))
+        } finally cs.unpersist()
     }
-    s.read.schema(StructType(Seq(
-        StructField("n_buckets", LongType), StructField("tot_tok", LongType),
-        StructField("kl_micro", LongType), StructField("batch_id", LongType))))
-      .parquet(sink)
-      .select("batch_id", "n_buckets", "tot_tok", "kl_micro")
-  }
 
   /** Bloom-gated streaming content-seen check — `q_dedup_bloom`'s probe
     * run per MICRO-BATCH against the fit-once corpus sketch: each
@@ -494,55 +439,26 @@ object StreamOps {
     * is a transparent prefilter), keyed by the staged batch ordinal. */
   def bloomGate(s: SparkSession, dir: String,
                 sketch: org.apache.spark.broadcast.Broadcast[Array[Byte]])
-      : DataFrame = {
-    val stream = newDocsStream(s, dir, modulus = 5, residue = 0)
-    val sink = graft.io.TempDirs.createDeletedOnExit("graft_stream_bloom_")
-      .getAbsolutePath
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val prevCfm = setNioCkptManager(s)
-    try {
+      : DataFrame =
+    docsGate(s, dir, "graft_stream_bloom_", StructField("doc_id", LongType),
+        StructField("n_blocks", LongType), StructField("n_seen_blocks", LongType),
+        StructField("seen_ppm", LongType)) {
       // the per-batch INVARIANT side, computed once per run (r17, guide
       // §2.4): every micro-batch previously re-scanned and re-hashed the
       // whole corpus inside its exact-verify join — 4 full corpus passes
       // per invocation for an artifact that does not change between
       // batches. The materialized block-hash set is the content-seen
       // index a production gate keeps hot; built INSIDE the timed region
-      // from the parquet inputs every invocation (not cross-run state),
-      // and inside the try: corpusBlockHashes materializes eagerly and
-      // can throw, and the finally must still restore the shuffle width.
+      // from the parquet inputs every invocation (not cross-run state).
       val corpus = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 5 =!= 0)
       val corpusHashes =
         graft.ops.BloomDedup.corpusBlockHashes(corpus, "doc_id", "text")
-      val q = stream.writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
-            if (!batch.isEmpty) {
-              val ab = batch.agg(min("arrival_batch")).head().getLong(0)
-              graft.ops.BloomDedup.seenBlocksAgainst(corpusHashes,
-                  batch.drop("arrival_batch"), "doc_id", "text", sketch)
-                .withColumn("batch_id", lit(ab))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite").parquet(sink)
-            }
-        }
-        .option("checkpointLocation", ckpt())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      restoreCkptManager(s, prevCfm)
+      (batch, write) =>
+        write(graft.ops.BloomDedup.seenBlocksAgainst(corpusHashes, batch,
+          "doc_id", "text", sketch))
     }
-    s.read.schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("n_blocks", LongType),
-        StructField("n_seen_blocks", LongType),
-        StructField("seen_ppm", LongType), StructField("batch_id", LongType))))
-      .parquet(sink)
-      .select("batch_id", "doc_id", "n_blocks", "n_seen_blocks", "seen_ppm")
-  }
+
 
   /** Tumbling 6h windows: count + sum per (window, event_type). */
   def tumbling(s: SparkSession, dir: String): DataFrame = {
@@ -693,37 +609,15 @@ object StreamOps {
     * turning at-least-once delivery into exactly-once output. Runs the
     * stream to completion (AvailableNow) and returns the sink contents. */
   def runForeachBatchSink(s: SparkSession, df: DataFrame, path: String): DataFrame = {
-    // same conf scoping as runToTable: the events file-stream needs the
-    // legacy nanos read conf per micro-batch, and a short AvailableNow
-    // run shouldn't pay 32 state/shuffle partitions of fixed cost
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNanos = s.conf.get(NanosConf)
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set(NanosConf, "true")
-    val prevCfm = setNioCkptManager(s)
-    try {
-      val q = df.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(path)
-        }
-        .option("checkpointLocation", ckpt())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set(NanosConf, prevNanos)
-      restoreCkptManager(s, prevCfm)
+    shortRun(s) {
+      runAvailableNow(df.writeStream.foreachBatch {
+        (batch: Dataset[Row], batchId: Long) => writeBatch(batch, batchId, path)
+      })
     }
     // explicit schema (input columns + the batch_id partition column): an
     // all-empty stream writes no part files, and schema inference over an
     // empty sink would throw instead of returning the empty frame
-    s.read.schema(df.schema.add("batch_id", org.apache.spark.sql.types.LongType))
-      .parquet(path)
+    s.read.schema(df.schema.add("batch_id", LongType)).parquet(path)
   }
 
   /** Custom state machine via flatMapGroupsWithState: per-user running

@@ -126,6 +126,48 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("ledger ignores a leftover temp marker; reruns still see every committed marker") {
+    import graft.io.Ledger
+    val dir = mkSource()
+    val out = dir + "_out"
+    val ledger = dir + "_ledger"
+    val (files1, _) = Pipeline.runIncremental(spark, dir, out, ledger)
+    assert(files1.size == 2)
+    // one marker per date written, each under only its final
+    // run-<uuid>.txt name
+    def markers() = new java.io.File(ledger).list().filterNot(_.startsWith(".")).toSeq
+    assert(markers().size == 2 &&
+      markers().forall(n => n.startsWith("run-") && n.endsWith(".txt")))
+    // a crash mid-record leaves a hidden, partial temp marker behind
+    Files.write(Paths.get(ledger, ".run-crashed.txt.tmp"), "/half/writ".getBytes)
+    val seen = Ledger.processed(spark, ledger)
+    assert(seen.size == 2 && seen.forall(_.endsWith("_measurement_data.csv")))
+    val (files2, rows2) = Pipeline.runIncremental(spark, dir, out, ledger)
+    assert(files2.isEmpty && rows2 == 0)
+    Files.write(Paths.get(dir, "20230801_measurement_data.csv"),
+      ("start_time,end_time,samples,temperature\n" +
+       "2023-08-01 00:00:00,2023-08-01 00:00:20,2,25.0\n").getBytes)
+    val (files3, _) = Pipeline.runIncremental(spark, dir, out, ledger)
+    assert(files3.size == 1 && markers().size == 3)
+    assert(Ledger.processed(spark, ledger).size == 3)
+  }
+
+  test("a failing write releases the cached frame on every attempt") {
+    val dir = mkSource()
+    // a target under a regular file: the count succeeds, every write fails
+    val blocker = Files.createTempFile(Paths.get("target"), "pipe_blocker", ".txt")
+    spark.catalog.clearCache()
+    intercept[Exception] {
+      Pipeline.runWithRetry(spark, dir, blocker.resolve("out").toString,
+        maxAttempts = 2, backoffMs = 0)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "run leaked its cache")
+    intercept[Exception] {
+      Pipeline.runIncremental(spark, dir, blocker.resolve("inc").toString, dir + "_ledger")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "runIncremental leaked its cache")
+  }
+
   test("loader stages the newest dated CSV into the source dir (S6)") {
     import graft.io.Loader
     val staging = Files.createTempDirectory(Paths.get("target"), "stage").toString

@@ -208,24 +208,49 @@ class StreamingSemanticsSpec extends SparkSpec {
     import graft.streaming.StreamOps
     val sfDir = "/root/testdata/sf0.001"
     val providerKey = StreamOps.RocksDbProviderConf._1
+    val partsKey = "spark.sql.shuffle.partitions"
+    val cfmKey = "spark.sql.streaming.checkpointFileManagerClass"
     // the key resolves to the HDFS-backed default when never set — record
     // whatever the session shows now and require it back afterwards
     val before = spark.conf.getOption(providerKey)
     assert(!before.exists(_.contains("RocksDB")), "precondition: not already RocksDB")
-    def agg = StreamOps.eventsStream(spark, sfDir)
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("long").as("w"), col("event_type"), col("n"))
-    def collect(name: String, provider: Option[String]) =
-      StreamOps.runToTable(spark, agg, name, "complete", provider)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
-    val viaDefault = collect("rp_default", None)
-    val viaRocks = collect("rp_rocks", Some(StreamOps.RocksDbProviderConf._2))
-    assert(viaDefault.nonEmpty && viaRocks == viaDefault)
-    // restore branch: the session must show the same provider as before —
-    // RocksDB must not leak into later streams in the shared session
-    assert(spark.conf.getOption(providerKey) == before,
-      "stateStoreProvider leaked into the session conf")
+    assert(spark.conf.getOption(cfmKey).isEmpty, "precondition: no checkpoint manager set")
+    // the session already runs at the short-run width of 4, which would
+    // hide a leaked width: run the streams at another one
+    val sessionParts = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "7")
+    // every key must come back exactly, RocksDB above all: it must not
+    // leak into later streams in the shared session
+    def assertRestored(after: String): Unit = {
+      assert(spark.conf.getOption(providerKey) == before,
+        s"stateStoreProvider leaked out of $after")
+      assert(spark.conf.get(partsKey) == "7", s"shuffle partitions leaked out of $after")
+      assert(spark.conf.getOption(cfmKey).isEmpty, s"checkpoint manager leaked out of $after")
+    }
+    try {
+      def agg = StreamOps.eventsStream(spark, sfDir)
+        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").cast("long").as("w"), col("event_type"), col("n"))
+      def collect(name: String, provider: Option[String]) =
+        StreamOps.runToTable(spark, agg, name, "complete", provider)
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+      val viaDefault = collect("rp_default", None)
+      val viaRocks = collect("rp_rocks", Some(StreamOps.RocksDbProviderConf._2))
+      assert(viaDefault.nonEmpty && viaRocks == viaDefault)
+      assertRestored("runToTable")
+      val sink = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get("target"), "rp_sink").toString + "/out"
+      StreamOps.runForeachBatchSink(spark,
+        StreamOps.eventsStream(spark, sfDir).select("event_id"), sink)
+      assertRestored("runForeachBatchSink")
+      // a missing index makes the gate's hoisted per-run work throw inside
+      // the scope; the session must come back all the same
+      intercept[Exception] {
+        StreamOps.dedupIngest(spark, sfDir, "target/no_such_signature_index")
+      }
+      assertRestored("a dedupIngest whose per-run set-up threw")
+    } finally spark.conf.set(partsKey, sessionParts)
   }
 
   test("left-outer stream-stream join null-emits unmatched rows only after watermark eviction") {
@@ -391,26 +416,40 @@ class StreamingSemanticsSpec extends SparkSpec {
 
   test("chunked staging tolerates a degenerate single-timestamp dataset") {
     import graft.streaming.StreamOps
+    // `<dir>/<table>.parquet` as one parquet file, as the test tables ship
+    def source(table: String, df: org.apache.spark.sql.DataFrame): String = {
+      val dir = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get("target"), "degenerate").toString
+      df.coalesce(1).write.parquet(s"$dir/${table}_src")
+      val part = new java.io.File(s"$dir/${table}_src").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(part.toPath,
+        java.nio.file.Paths.get(dir, s"$table.parquet"))
+      dir
+    }
+    def events(ts: String) = spark.range(10).selectExpr(
+      "id AS event_id", s"CAST($ts AS LONG) AS ts",
+      "id % 3 AS user_id", "'click' AS event_type",
+      "CAST(id AS DOUBLE) AS value", "'{}' AS props")
     // all events on ONE instant: every middle chunk's time range is empty.
     // Staging must skip the empty chunks (not crash), and the stream must
     // still process every row in the batches that remain.
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "degenerate").toString
-    spark.range(10).selectExpr(
-        "id AS event_id", "CAST(1700000000000000000 AS LONG) AS ts",
-        "id % 3 AS user_id", "'click' AS event_type",
-        "CAST(id AS DOUBLE) AS value", "'{}' AS props")
-      .coalesce(1).write.parquet(s"$dir/events_src")
-    // eventsStream reads <dir>/events.parquet — link the single part file
-    val part = new java.io.File(s"$dir/events_src").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(dir, "events.parquet"))
     val counted = StreamOps.runToTable(spark,
-      StreamOps.eventsStream(spark, dir)
+      StreamOps.eventsStream(spark, source("events", events("1700000000000000000")))
         .groupBy(col("user_id")).agg(count(lit(1)).as("n")),
       "degenerate_counts", "complete")
     assert(counted.agg(sum("n")).head.getLong(0) == 10)
+    // an entirely null staging key would stage nothing and silently drop
+    // every row: the stager refuses it, for events and documents alike
+    val nullTs = intercept[IllegalArgumentException] {
+      StreamOps.eventsStream(spark, source("events", events("NULL")))
+    }
+    assert(nullTs.getMessage.contains("ts is entirely null"), nullTs.getMessage)
+    val nullIds = intercept[IllegalArgumentException] {
+      StreamOps.newDocsStream(spark, source("documents", spark.range(10)
+        .selectExpr("CAST(NULL AS LONG) AS doc_id", "'some text' AS text")), 5, 0)
+    }
+    assert(nullIds.getMessage.contains("doc_id is entirely null"), nullIds.getMessage)
   }
 
   test("flatMapGroupsWithState carries state across micro-batches") {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Multi-source BFS hop distances (synchronous Bellman-Ford over unit
   * weights — the Pregel SSSP shape): every vertex reachable from the
@@ -15,114 +14,54 @@ import org.apache.spark.sql.functions._
   * (relaxing never raises a distance), so the fixpoint is unique and no
   * tie-break is needed. [[distancesConverged]] iterates to that fixpoint
   * with exact stop-on-empty-frontier detection (one cheap count per
-  * round) and reports the executed round count for the replay oracle;
-  * the fixed-horizon [[distances]] remains for callers that want
-  * PageRank's `iters`-style bounded semantics.
+  * round) and reports the executed round count for the replay oracle.
   *
-  * Scale shape: the edge list is hash-partitioned by `src` once and
-  * persisted; each round is one narrow join of the vertex-sized distance
-  * table against that layout plus one min-combine aggregation (map-side
-  * partials), shuffling reached-vertex rows only. The distance table is
-  * referenced twice per round (carry-over union + frontier join) — safe
-  * in RDD lineage (a DAG; the pre-r17 Catalyst chain needed a per-round
-  * localCheckpoint against analyzed-plan doubling, see [[KCore.peel]]).
-  * O(diameter) rounds.
+  * Scale shape: a [[VertexLoop]] over the edge list; each round is one
+  * narrow join of the vertex-sized distance table against the edge
+  * layout plus one min-combine aggregation (map-side partials), shuffling
+  * reached-vertex rows only. O(diameter) rounds.
   */
 object Bfs {
 
-  /** Hop distances after `rounds` synchronous relaxations over
-    * symmetrized `edges` (cols src, dst) from the seed vertices selected
-    * by `seed` (a predicate over the vertex id column `id`). Returns
-    * (id, dist) for REACHED vertices only. */
-  def distances(edges: DataFrame, seed: org.apache.spark.sql.Column,
-                rounds: Int): DataFrame =
-    run(edges, seed, rounds, stopOnFixpoint = false)._1
-
-  /** Convergence-driven BFS: relax until a round reaches NO new vertex,
-    * up to the `maxRounds` safety cap. Returns the fixpoint distances
+  /** Convergence-driven BFS over symmetrized `edges` (cols src, dst) from
+    * the seed vertices selected by `seed` (a predicate over the vertex id
+    * column `id`): relax until a round reaches NO new vertex, up to the
+    * `maxRounds` safety cap. Returns (id, dist) for REACHED vertices only,
     * plus the number of rounds actually executed — the count the
     * round-replay oracle must use to reproduce the result bit-for-bit.
+    * A cap below the fixpoint depth yields the distances after exactly
+    * `maxRounds` relaxations.
     *
-    * Detection is exact and costs one cheap count per round (on the
-    * round's already-checkpointed frame): in unit-weight synchronous
-    * BFS a vertex's distance is final the first round it is reached
-    * (the first reaching round IS its minimum hop), so the reached set
-    * only ever GROWS and an unchanged count implies an unchanged table
-    * — no deep corpus can silently under-iterate the way a fixed
-    * horizon can. */
-  def distancesConverged(edges: DataFrame, seed: org.apache.spark.sql.Column,
-                         maxRounds: Int = 100): (DataFrame, Int) =
-    run(edges, seed, maxRounds, stopOnFixpoint = true)
-
-  /** SUBSTRATE (r17, guide §2.4): the relaxation rounds run as an RDD
-    * loop against one shared HashPartitioner — the same swap
-    * [[PageRank]]/[[Components]]/[[Lpa]] carry. The previous shape
-    * localCheckpointed a Catalyst frame per round (required: the frame
-    * is referenced twice per round), paying per-round plan analysis, an
-    * AQE-staged materialization job, and the checkpoint copy for a
-    * VERTEX-sized table; here each round is one narrow frontier join +
-    * one min-combine shuffle inside jobs that reuse every earlier
-    * round's shuffle files, and the twice-referenced distance table is a
-    * persisted RDD (no plan doubling — RDD lineage is a DAG, not a
-    * re-analyzed tree).
+    * Detection is exact: in unit-weight synchronous BFS a vertex's
+    * distance is final the first round it is reached (the first reaching
+    * round IS its minimum hop), so the reached set only ever GROWS and an
+    * unchanged count implies an unchanged table — no deep corpus can
+    * silently under-iterate the way a fixed horizon can.
     *
     * EQUIVALENCE (bit-exact, pinned by BfsSpec and by
-    * R17GraphLoopEquivSpec against the inlined pre-r17 recurrence on
-    * random graphs): same seed set (distinct srcs passing `seed`, d=0), per
-    * round the same carry-over-union / relax / min-combine recurrence on
-    * exact ints (min is order-invariant), and the same
-    * stop-on-unchanged-count detection — counts of identical sets are
-    * identical, so the executed-round count the replay oracle consumes
-    * cannot drift. */
-  private def run(edges: DataFrame, seed: org.apache.spark.sql.Column,
-                  rounds: Int, stopOnFixpoint: Boolean): (DataFrame, Int) = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    * R17GraphLoopEquivSpec against the inlined DataFrame recurrence on
+    * random graphs): same seed set (distinct srcs passing `seed`, d=0),
+    * per round the same carry-over-union / relax / min-combine recurrence
+    * on exact ints (min is order-invariant). The returned table is
+    * materialized; the edge cache is released before returning. */
+  def distancesConverged(edges: DataFrame, seed: org.apache.spark.sql.Column,
+                         maxRounds: Int = 100): (DataFrame, Int) = {
+    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = raw.count()
-    val sessionParts =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // ~64k edges per partition, capped at the session setting (the
-    // Components sizing rule)
-    val nParts = math.max(1L,
-      math.min(sessionParts.toLong, edgeCount / 65536 + 1)).toInt
-    val part = new org.apache.spark.HashPartitioner(nParts)
-    // the one-time edge shuffle; every round's frontier join is narrow
-    val e = raw.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize from raw's cache before dropping it
-    raw.unpersist()
-    // seed selection: the `seed` predicate is a Catalyst Column over the
-    // vertex id, so evaluate it through one vertex-sized DF hop
-    var dist: org.apache.spark.rdd.RDD[(Long, Int)] =
-      e.keys.distinct(nParts).toDF("id").filter(seed)
-        .as[Long].rdd.map((_, 0)).partitionBy(part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var prevCount = if (stopOnFixpoint) dist.count() else -1L
-    var executed = 0
-    var converged = false
-    while (executed < rounds && !converged) {
-      // narrow: e and dist share `part`; the min-combine is the round's
+    val g = VertexLoop(edges)
+    // the `seed` predicate is a Catalyst Column over the vertex id, so
+    // evaluate it through one vertex-sized DF hop
+    val seeds = g.vertices.toDF("id").filter(seed)
+      .as[Long].rdd.map((_, 0)).partitionBy(g.part)
+    val (dist, rounds) = VertexLoop.untilStable(seeds, maxRounds) { d =>
+      // narrow: edges and d share `part`; the min-combine is the round's
       // one (vertex-sized, map-side-combined) shuffle
-      val relax = e.join(dist).map { case (_, (dst, d)) => (dst, d + 1) }
-      val next = dist.union(relax)
-        .reduceByKey(part, math.min(_: Int, _: Int))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      executed += 1
-      if (stopOnFixpoint) {
-        // materializes the round AND measures convergence: the reached
-        // set only grows, so an unchanged count is an unchanged table
-        val c = next.count()
-        converged = c == prevCount
-        prevCount = c
-      }
-      dist.unpersist()
-      dist = next
+      val relax = g.edges.join(d).map { case (_, (dst, x)) => (dst, x + 1) }
+      d.union(relax).reduceByKey(g.part, math.min(_: Int, _: Int))
     }
-    (dist.toDF("id", "dist"), executed)
+    g.edges.unpersist()
+    (dist.toDF("id", "dist"), rounds)
   }
 
   /** The DuckDB replay: the same `rounds` carry-over-union/relax/min CTE

@@ -1,8 +1,6 @@
 package graft.ops
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the clustering step
@@ -20,61 +18,28 @@ import org.apache.spark.storage.StorageLevel
   * "Connected Components in MapReduce and Beyond", SoCC'14), whose
   * per-round dataflow is this same join+min shape.
   *
-  * Substrate: an RDD loop, like [[Bfs]], [[KCore]] and [[Lpa]]. A DataFrame
-  * fixpoint builds brand-new logical plans every round, and each round
-  * pays Catalyst analysis + whole-stage-codegen compilation for plans
-  * that execute once — measured at ~0.5 s/job × ~9 jobs/round on a
-  * 14-edge graph (12 s total for a trivial input). The RDD loop plans
-  * nothing per round and, more importantly, lets every round's joins run
-  * NARROW against one shared HashPartitioner:
-  *  - `sym` (the symmetric edge list) is hash-partitioned by src ONCE and
-  *    never moves again — at 10^11 edges this is the dataset you cannot
-  *    afford to reshuffle per round (the same reason GraphX partitions
-  *    its edge RDD once and iterates against it).
-  *  - per round only vertex-sized label tables shuffle: the neighbor-min
-  *    `reduceByKey` (map-side combined) and the pointer-jump re-key.
-  *  - ONE action per round: the convergence count materializes the new
-  *    label RDD; the driver loop is control flow only, never a data
-  *    collect.
-  * Partition width is sized from the measured edge count (capped at the
-  * session's shuffle setting): a 300-edge graph iterates on 1 partition
-  * instead of scheduling 32 tasks × rounds of fixed overhead, while a
-  * huge graph keeps full parallelism.
+  * Substrate: a [[VertexLoop]] over the symmetrized edge list. Per round
+  * only vertex-sized label tables shuffle — the neighbor-min
+  * `reduceByKey` (map-side combined) and the pointer-jump re-key — and
+  * each convergence check is ONE action: the count materializes the new
+  * label RDD; the driver loop is control flow only, never a data
+  * collect.
   */
 object Components {
 
   /** Per-vertex component labels: (id, component) where component is the
     * minimum vertex id reachable from `id`. Vertices are the endpoints of
     * `edges` (isolated vertices, belonging to no pair, are not emitted).
-    * Vertex ids must be integral (they are cast to long). */
+    * Vertex ids must be integral (they are cast to long). The returned
+    * table is materialized; the edge cache is released before returning,
+    * and every cache is released before a non-convergence refusal. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // refuse non-integral id columns rather than silently truncating
-    // (10.2 and 10.9 must not merge into vertex 10) or NPE-ing on strings
-    Seq(aCol, bCol).foreach { c =>
-      val dt = edges.schema(c).dataType
-      require(Seq("byte", "short", "integer", "long").contains(dt.typeName),
-        s"vertex id column '$c' must be integral, got ${dt.typeName}")
-    }
-    val raw = edges.select(col(aCol).cast("long"), col(bCol).cast("long"))
-      .as[(Long, Long)].rdd
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = raw.count() // one upstream execution; sizes the loop
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // ~64k edges per partition keeps tasks meaningful; never exceed the
-    // session setting, never go below 1.
-    val nParts =
-      math.max(1L, math.min(sessionParts.toLong, edgeCount / 65536 + 1)).toInt
-    val part = new HashPartitioner(nParts)
-    // the one-time edge shuffle; every later `sym.join(labels)` is narrow
-    val sym = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count() // materialize from raw's cache before dropping it
-    raw.unpersist()
-    var labels = sym.keys.distinct(nParts).map(v => (v, v))
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    val g = VertexLoop(edges, aCol, bCol, symmetrize = true)
+    var labels = g.vertices.map(v => (v, v))
+      .partitionBy(g.part).persist(StorageLevel.MEMORY_AND_DISK)
     // one min-propagate + pointer-jump round; returns the new label table
     // (persisted) plus the round's intermediate to unpersist after the
     // next action materializes everything downstream of it
@@ -83,9 +48,9 @@ object Components {
            org.apache.spark.rdd.RDD[(Long, Long)]) = {
       // narrow join (both sides share `part`); reduceByKey is the round's
       // edge-driven shuffle, map-side combined down to vertex cardinality
-      val nbrMin = sym.join(lbl)
+      val nbrMin = g.edges.join(lbl)
         .map { case (_, (dst, l)) => (dst, l) }
-        .reduceByKey(part, math.min(_: Long, _: Long))
+        .reduceByKey(g.part, math.min(_: Long, _: Long))
       // narrow: lbl and nbrMin are both partitioned by `part`
       val prop = lbl.leftOuterJoin(nbrMin)
         .mapValues { case (l, nl) => math.min(l, nl.getOrElse(l)) }
@@ -95,7 +60,7 @@ object Components {
       val next = prop.map { case (v, l) => (l, v) }
         .leftOuterJoin(prop)
         .map { case (l, (v, l2)) => (v, l2.getOrElse(l)) }
-        .partitionBy(part)
+        .partitionBy(g.part)
         .persist(StorageLevel.MEMORY_AND_DISK)
       (next, prop)
     }
@@ -145,9 +110,12 @@ object Components {
       labels.unpersist()
       labels = l2
     }
-    sym.unpersist()
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds")
+    g.edges.unpersist()
+    if (changed > 0) {
+      labels.unpersist()
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds")
+    }
     labels.toDF("id", "component")
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (LPA) community detection over an edge
   * list — Raghavan et al. 2007, made DETERMINISTIC.
@@ -24,12 +23,13 @@ import org.apache.spark.sql.functions._
   * is part of the operator's defined semantics, exactly like PageRank's
   * `iters`.
   *
-  * Scale shape (100 TB graph): identical to [[PageRank]] — the edge list
-  * is repartitioned by `src` ONCE and persisted; each round joins the
-  * vertex-sized label table onto that layout, then two combiner-backed
-  * aggregations whose shuffle keys are (dst, label) and dst — label-table
-  * sized, never edge-sized. The argmax is max(struct(count, -label)):
-  * a single map-side-combinable aggregate, no per-node window sort.
+  * Scale shape (100 TB graph): a [[VertexLoop]] over the edge list; each
+  * round joins the vertex-sized label table onto the edge layout
+  * (narrow), then two combiner-backed aggregations whose shuffle keys are
+  * (dst, label) and dst — label-table sized, never edge-sized. No round
+  * runs an action: the whole propagate executes as ONE job when the
+  * result is consumed, so the returned frame reads the edge cache lazily
+  * and the edges stay persisted.
   */
 object Lpa {
 
@@ -37,59 +37,30 @@ object Lpa {
     * pass both directions for an undirected graph). Returns
     * (id, community) — community = the round-`rounds` label.
     *
-    * SUBSTRATE (r17, guide §2.4): the rounds run as an RDD loop against
-    * one shared HashPartitioner — the same swap [[PageRank]] and
-    * [[Components]] carry. The previous shape unrolled the rounds into
-    * one lazy Catalyst plan: each round planned its own vote exchange +
-    * argmax exchange and AQE re-optimized per materialized stage, so a
-    * 3-round propagate over a vertex-sized label table paid ~6 exchanges
-    * of driver-side stage orchestration. Here the edge list is
-    * hash-partitioned by src ONCE; per round the vote count and the
-    * argmax are the two (label-table-sized, map-side-combined) shuffles
-    * and the label⋈edge join is narrow — the whole propagate executes as
-    * ONE job with zero per-round driver actions.
-    *
     * EQUIVALENCE (bit-exact, pinned by R17GraphLoopEquivSpec against the
-    * inlined pre-r17 recurrence on random graphs): same initial labeling
-    * lab_0(v)=v over distinct srcs; per round the same per-(dst, lab)
-    * neighbor-vote counts (count is order-invariant), and the same
-    * argmax — max count, ties to the SMALLEST label — computed by an
-    * associative/commutative reduce over the per-dst vote rows, which is
-    * a total order on (c, lab) pairs (vote keys are distinct per dst),
-    * exactly the old max(struct(c, -lab)). */
+    * inlined DataFrame recurrence on random graphs): same initial
+    * labeling lab_0(v)=v over distinct srcs; per round the same
+    * per-(dst, lab) neighbor-vote counts (count is order-invariant), and
+    * the same argmax — max count, ties to the SMALLEST label — computed
+    * by an associative/commutative reduce over the per-dst vote rows,
+    * which is a total order on (c, lab) pairs (vote keys are distinct per
+    * dst), exactly max(struct(c, -lab)). */
   def propagate(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = raw.count()
-    val sessionParts =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // ~64k edges per partition, capped at the session setting — the
-    // Components sizing rule: a small graph iterates on few partitions
-    // instead of scheduling (shuffle.partitions × rounds) empty tasks
-    val nParts = math.max(1L,
-      math.min(sessionParts.toLong, edgeCount / 65536 + 1)).toInt
-    val part = new org.apache.spark.HashPartitioner(nParts)
-    // the one-time edge shuffle; every round's label⋈edge join is narrow
-    val e = raw.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize from raw's cache before dropping it
-    raw.unpersist()
-    var labels: org.apache.spark.rdd.RDD[(Long, Long)] =
-      e.keys.distinct(nParts).map(v => (v, v)).partitionBy(part)
+    val g = VertexLoop(edges)
+    var labels = g.vertices.map(v => (v, v)).partitionBy(g.part)
     for (_ <- 1 to rounds) {
-      // narrow: e and labels share `part`; vote counts combine map-side
-      val votes = e.join(labels)
+      // narrow: edges and labels share `part`; vote counts combine map-side
+      val votes = g.edges.join(labels)
         .map { case (_, (dst, lab)) => ((dst, lab), 1L) }
         .reduceByKey(_ + _)
       // argmax: max count, ties to the smallest label — associative,
       // commutative, and total over a dst's distinct (c, lab) rows
       labels = votes
         .map { case ((dst, lab), c) => (dst, (c, lab)) }
-        .reduceByKey(part, (a, b) =>
+        .reduceByKey(g.part, (a, b) =>
           if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
         .mapValues(_._2)
     }

@@ -85,35 +85,47 @@ object PageRank {
   def fixedPointWithRelease(edges: DataFrame, iters: Int,
       dampMicro: Long = 850000000L): (DataFrame, () => Unit) = {
     require(iters >= 1, s"iters must be >= 1: $iters")
+    val (e, nodes) = prepare(edges, dampMicro)
+    var ranks = nodes.withColumn("r", expr(s"${R}L div nn"))
+    for (_ <- 1 to iters) ranks = round(ranks, e, nodes, dampMicro)
+    val out = ranks.select(col("node"), col("r").as("rank_micro"))
+    (out, () => { e.unpersist(false); nodes.unpersist(false); () })
+  }
+
+  /** The iteration-invariant inputs of the distributed recurrence: the
+    * edge list cast to long and repartitioned by `src` (persisted), and
+    * the vertex frame (node, outdeg, nn) — persisted because the unrolled
+    * plan consumes it at every level (iters + 1 times) and Catalyst does
+    * not dedupe common subtrees; without the persist each level would
+    * recompute the degree aggregate from the edge cache. Vertex-sized:
+    * the safe thing to cache at any scale. */
+  private def prepare(edges: DataFrame,
+      dampMicro: Long): (DataFrame, DataFrame) = {
     require(dampMicro >= 0L && dampMicro <= R,
       s"dampMicro must be in [0, $R]: $dampMicro")
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .repartition(col("src")).persist()
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val n1 = deg.agg(count(lit(1)).as("nn"))
-    // (node, outdeg, nn): the iteration-invariant vertex frame. Persisted
-    // because the unrolled plan consumes it at every level (iters + 1
-    // times) and Catalyst does not dedupe common subtrees — without the
-    // persist each level would recompute deg's aggregate from the edge
-    // cache. Vertex-sized: the safe thing to cache at any scale.
     val nodes = deg.select(col("src").as("node"), col("outdeg"))
       .crossJoin(broadcast(n1))
       .persist()
+    (e, nodes)
+  }
 
-    var ranks = nodes.withColumn("r", expr(s"${R}L div nn"))
-    for (_ <- 1 to iters) {
-      val contribs = ranks
-        .select(col("node"), expr("r div outdeg").as("c"))
-        .join(e, col("node") === col("src"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = nodes
-        .join(contribs, col("node") === col("dst"), "left")
-        .select(col("node"), col("outdeg"), col("nn"),
-          expr(s"(${R}L - ${dampMicro}L) div nn + " +
-            s"(${dampMicro}L * coalesce(s, 0L)) div ${R}L").as("r"))
-    }
-    val out = ranks.select(col("node"), col("r").as("rank_micro"))
-    (out, () => { e.unpersist(false); nodes.unpersist(false); () })
+  /** One round of the recurrence: (node, outdeg, nn, r) -> the same
+    * columns one iteration later. */
+  private def round(ranks: DataFrame, e: DataFrame, nodes: DataFrame,
+      dampMicro: Long): DataFrame = {
+    val contribs = ranks
+      .select(col("node"), expr("r div outdeg").as("c"))
+      .join(e, col("node") === col("src"))
+      .groupBy("dst").agg(sum("c").as("s"))
+    nodes
+      .join(contribs, col("node") === col("dst"), "left")
+      .select(col("node"), col("outdeg"), col("nn"),
+        expr(s"(${R}L - ${dampMicro}L) div nn + " +
+          s"(${dampMicro}L * coalesce(s, 0L)) div ${R}L").as("r"))
   }
 
   /** [[fixedPoint]] specialised for graphs whose size is bounded BY
@@ -222,33 +234,14 @@ object PageRank {
     require(maxIters >= 1, s"maxIters must be >= 1: $maxIters")
     require(checkpointEvery >= 1,
       s"checkpointEvery must be >= 1: $checkpointEvery")
-    require(dampMicro >= 0L && dampMicro <= R,
-      s"dampMicro must be in [0, $R]: $dampMicro")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src")).persist()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val n1 = deg.agg(count(lit(1)).as("nn"))
-    val nodes = deg.select(col("src").as("node"), col("outdeg"))
-      .crossJoin(broadcast(n1))
-      .persist()
-
+    val (e, nodes) = prepare(edges, dampMicro)
     var prev = nodes.withColumn("r", expr(s"${R}L div nn")).localCheckpoint()
     var done = 0
     var delta = Long.MaxValue
     while (done < maxIters && delta > epsMicro) {
       val segment = math.min(checkpointEvery, maxIters - done)
       var ranks = prev
-      for (_ <- 1 to segment) {
-        val contribs = ranks
-          .select(col("node"), expr("r div outdeg").as("c"))
-          .join(e, col("node") === col("src"))
-          .groupBy("dst").agg(sum("c").as("s"))
-        ranks = nodes
-          .join(contribs, col("node") === col("dst"), "left")
-          .select(col("node"), col("outdeg"), col("nn"),
-            expr(s"(${R}L - ${dampMicro}L) div nn + " +
-              s"(${dampMicro}L * coalesce(s, 0L)) div ${R}L").as("r"))
-      }
+      for (_ <- 1 to segment) ranks = round(ranks, e, nodes, dampMicro)
       val cur = ranks.localCheckpoint() // eager: lineage truncated here
       // rename one side: cur and prev share attribute ids (both descend
       // from the persisted vertex frame), so a qualified self-join would

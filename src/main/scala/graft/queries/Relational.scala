@@ -975,8 +975,7 @@ object Relational {
     // so a 100x corpus with a deeper peel order can never silently
     // under-iterate; the executed round count is recorded per corpus and
     // the DuckDB oracle replays exactly those rounds as CTEs (4 executed
-    // rounds at sf0.01 incl. the final no-change round, vs the legacy
-    // fixed 8 — convergence is also CHEAPER when the corpus is shallow).
+    // rounds at sf0.01 incl. the final no-change round).
     // Per round: two vertex-sized semi-joins against
     // the once-partitioned edge list + one combiner-backed degree
     // aggregation — edges never reshuffle.

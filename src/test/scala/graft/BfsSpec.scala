@@ -16,7 +16,8 @@ class BfsSpec extends SparkSpec {
     // hops from seed 0 but only 1 from seed 100 -> min wins; the
     // disconnected pair (7,8) never appears in the output.
     val edges = sym(Seq((0L, 1L), (1L, 2L), (2L, 3L), (100L, 3L), (7L, 8L)))
-    val out = Bfs.distances(edges, col("id") % 100 === 0, rounds = 5)
+    val out = Bfs.distancesConverged(edges,
+        col("id") % 100 === 0, maxRounds = 5)._1
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(out == Map(0L -> 0, 1L -> 1, 2L -> 2, 3L -> 1, 100L -> 0),
       out.toString)
@@ -28,7 +29,8 @@ class BfsSpec extends SparkSpec {
     // verdict's silent-under-iteration hazard); distancesConverged must
     // keep going until the frontier empties and return every exact hop.
     val edges = sym((0L until 15L).map(i => (i, i + 1)))
-    val truncated = Bfs.distances(edges, col("id") === 0, rounds = 10)
+    val truncated = Bfs.distancesConverged(edges,
+        col("id") === 0, maxRounds = 10)._1
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(!truncated.contains(15L), "fixture degenerate: 10 rounds already reach the end")
     val (df, rounds) = Bfs.distancesConverged(edges, col("id") === 0)
@@ -38,7 +40,8 @@ class BfsSpec extends SparkSpec {
     assert(rounds == 16, s"executed rounds: $rounds")
     // and the recorded count replays bit-identically through the oracle shape:
     // one more fixed round changes nothing
-    val replay = Bfs.distances(edges, col("id") === 0, rounds = rounds)
+    val replay = Bfs.distancesConverged(edges,
+        col("id") === 0, maxRounds = rounds)._1
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(replay == out)
   }
@@ -53,9 +56,11 @@ class BfsSpec extends SparkSpec {
       val symEdges = pairs.unionByName(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
         .persist()
-      val r10 = Bfs.distances(symEdges, col("id") % 50 === 0, rounds = 10)
+      val r10 = Bfs.distancesConverged(symEdges,
+          col("id") % 50 === 0, maxRounds = 10)._1
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      val r11 = Bfs.distances(symEdges, col("id") % 50 === 0, rounds = 11)
+      val r11 = Bfs.distancesConverged(symEdges,
+          col("id") % 50 === 0, maxRounds = 11)._1
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       symEdges.unpersist()
       assert(r10 == r11,

@@ -77,7 +77,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     ("LlmOps.scala", "nRow") -> (1, "ONE_ROW: corpus max doc id + 1 (negative-draw modulus)"),
     ("LlmOps.scala", "quota") -> (1, "SCHEMA: one row per label"),
     ("Mixing.scala", "stats") -> (2, "SCHEMA: one row per mixture domain (joined twice: quota + deficit pass)"),
-    ("PageRank.scala", "n1") -> (2, "ONE_ROW: vertex count (seed + per-round dangling redistribution)"),
+    ("PageRank.scala", "n1") -> (1, "ONE_ROW: vertex count (prepare, shared by fixedPoint and untilConverged)"),
     ("RangeJoin.scala", "offsets") -> (3, "SCHEMA: one row per shard / per (group, shard) (fixed shard count; sweep + overlap + concurrency sites)"),
     ("Relational.scala", "freq") -> (2, "SCHEMA: brand marginals (p_brand domain; lift numerator + denominator)"),
     ("Relational.scala", "n") -> (2, "SCHEMA: nation dimension (25 rows; two query sites)"),

@@ -18,7 +18,7 @@ class KCoreSpec extends SparkSpec {
     // never counted toward K5-internal degrees).
     val k5 = for (a <- 1L to 5L; b <- 1L to 5L if a < b) yield (a, b)
     val edges = sym(k5 ++ Seq((5L, 10L), (10L, 11L)))
-    val out = KCore.peel(edges, k = 4, rounds = 4).collect()
+    val out = KCore.peelConverged(edges, k = 4, maxRounds = 4)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 4L),
       out.toString)
@@ -32,10 +32,10 @@ class KCoreSpec extends SparkSpec {
     // degrees, not the original ones.
     val edges = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L),
       (4L, 5L), (5L, 6L), (4L, 6L)))
-    val afterTwo = KCore.peel(edges, k = 2, rounds = 2).collect()
+    val afterTwo = KCore.peelConverged(edges, k = 2, maxRounds = 2)._1.collect()
       .map(_.getLong(0)).toSet
     assert(afterTwo == Set(3L, 4L, 5L, 6L), s"round 2: $afterTwo")
-    val fixed = KCore.peel(edges, k = 2, rounds = 3).collect()
+    val fixed = KCore.peelConverged(edges, k = 2, maxRounds = 3)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fixed == Map(4L -> 2L, 5L -> 2L, 6L -> 2L), fixed.toString)
   }
@@ -49,7 +49,7 @@ class KCoreSpec extends SparkSpec {
     // exactly the triangle.
     val edges = sym((0L until 12L).map(i => (i, i + 1)) ++
       Seq((12L, 13L), (13L, 14L), (12L, 14L)))
-    val truncated = KCore.peel(edges, k = 2, rounds = 8).collect()
+    val truncated = KCore.peelConverged(edges, k = 2, maxRounds = 8)._1.collect()
       .map(_.getLong(0)).toSet
     assert(truncated.size > 3, "fixture degenerate: 8 rounds already reach the fixpoint")
     val (df, rounds) = KCore.peelConverged(edges, k = 2)
@@ -58,15 +58,17 @@ class KCoreSpec extends SparkSpec {
     // 12 removal rounds + the final no-change round that proves the fixpoint
     assert(rounds == 13, s"executed rounds: $rounds")
     // the recorded count replays bit-identically through the fixed-round shape
-    val replay = KCore.peel(edges, k = 2, rounds = rounds).collect()
+    val replay = KCore.peelConverged(edges, k = 2, maxRounds = rounds)._1
+      .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(replay == out)
   }
 
   test("the catalog query's 8-round horizon reaches the fixpoint at sf0.001 and sf0.01") {
-    // q_graph_kcore publishes 'survivors after 8 peels' — this pins that
+    // q_graph_kcore peels to convergence; its oracle falls back to an
+    // 8-round replay when no executed count was recorded — this pins that
     // 8 rounds IS the fixpoint on the catalog corpus (one more round
-    // changes nothing), so the published result is the true 2-core
+    // changes nothing), so that fallback replays the true 2-core
     // (measured peel depths: 2 at sf0.001, 4 at sf0.01, 6 at sf0.1).
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val pairs = graft.ops.Triangles.coPairs(
@@ -77,9 +79,9 @@ class KCoreSpec extends SparkSpec {
       val symEdges = pairs.unionByName(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
         .persist()
-      val r8 = KCore.peel(symEdges, k = 2, rounds = 8).collect()
+      val r8 = KCore.peelConverged(symEdges, k = 2, maxRounds = 8)._1.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val r9 = KCore.peel(symEdges, k = 2, rounds = 9).collect()
+      val r9 = KCore.peelConverged(symEdges, k = 2, maxRounds = 9)._1.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       symEdges.unpersist()
       assert(r8 == r9, s"$dir: 8 rounds not a fixpoint (|r8|=${r8.size}, |r9|=${r9.size})")

@@ -98,15 +98,18 @@ class R17GraphLoopEquivSpec extends SparkSpec {
   }
 
   test("Bfs.distancesConverged (RDD loop) == pre-r17 DF recurrence") {
-    for (seed <- 1L to 3L) {
+    // caps 1-3 stop below the fixpoint (these graphs take 4-5 rounds): a
+    // capped run must equal the same number of fixed reference rounds
+    for (seed <- 1L to 3L; cap <- Seq(1, 2, 3, 100)) {
       val g = randomGraph(n = 60, m = 90, seed)
-      val (nowDf, nowRounds) =
-        graft.ops.Bfs.distancesConverged(g, col("id") % 5 === 0)
+      val (nowDf, nowRounds) = graft.ops.Bfs.distancesConverged(g,
+        col("id") % 5 === 0, maxRounds = cap)
       val now = nowDf.orderBy("id").as[(Long, Int)].collect().toSeq
-      val (oldDf, oldRounds) = bfsDf(g, col("id") % 5 === 0, rounds = 100)
+      val (oldDf, oldRounds) = bfsDf(g, col("id") % 5 === 0, rounds = cap)
       val old = oldDf.orderBy("id").as[(Long, Int)].collect().toSeq
-      assert(nowRounds == oldRounds, s"BFS round count drifted on seed $seed")
-      assert(now == old, s"BFS distances diverged on seed $seed")
+      assert(nowRounds == oldRounds,
+        s"BFS round count drifted on seed $seed cap $cap")
+      assert(now == old, s"BFS distances diverged on seed $seed cap $cap")
     }
   }
 
@@ -129,14 +132,54 @@ class R17GraphLoopEquivSpec extends SparkSpec {
   }
 
   test("KCore.peelConverged (RDD loop) == pre-r17 DF recurrence") {
-    for (seed <- 1L to 3L) {
+    for (seed <- 1L to 3L; cap <- Seq(1, 2, 3, 100)) {
       val g = randomGraph(n = 40, m = 70, seed)
-      val (nowDf, nowRounds) = graft.ops.KCore.peelConverged(g, k = 2)
+      val (nowDf, nowRounds) =
+        graft.ops.KCore.peelConverged(g, k = 2, maxRounds = cap)
       val now = nowDf.orderBy("id").as[(Long, Long)].collect().toSeq
-      val (oldDf, oldRounds) = kcoreDf(g, k = 2, rounds = 100)
+      val (oldDf, oldRounds) = kcoreDf(g, k = 2, rounds = cap)
       val old = oldDf.orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(nowRounds == oldRounds, s"k-core round count drifted on seed $seed")
-      assert(now == old, s"k-core diverged on seed $seed")
+      assert(nowRounds == oldRounds,
+        s"k-core round count drifted on seed $seed cap $cap")
+      assert(now == old, s"k-core diverged on seed $seed cap $cap")
     }
+  }
+
+  test("non-integral vertex ids are refused by every RDD-loop operator") {
+    // a truncating cast would merge 10.2 and 10.9 into vertex 10
+    val g = Seq((10.2, 1L), (10.9, 2L), (1.0, 10L)).toDF("src", "dst")
+    val calls: Seq[() => Any] = Seq(
+      () => graft.ops.Bfs.distancesConverged(g, col("id") === 1),
+      () => graft.ops.KCore.peelConverged(g, k = 1),
+      () => graft.ops.Lpa.propagate(g, rounds = 1),
+      () => graft.ops.Components.connectedComponents(g, "src", "dst"))
+    for (call <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("must be integral"), e.getMessage)
+    }
+  }
+
+  test("graph loops release the caches their results no longer read") {
+    val sc = spark.sparkContext
+    // ids of the RDDs `body` leaves persisted (released again afterwards)
+    def leftPersisted(body: => Unit): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      val left = sc.getPersistentRDDs.keySet -- before
+      left.foreach(id => sc.getPersistentRDDs(id).unpersist())
+      left.size
+    }
+    val g = randomGraph(n = 60, m = 90, seed = 1L)
+    // the materialized distance table is the one cache the result reads
+    assert(leftPersisted {
+      graft.ops.Bfs.distancesConverged(g, col("id") % 5 === 0)._1.collect()
+    } == 1)
+    val path = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    assert(leftPersisted {
+      intercept[IllegalStateException] {
+        graft.ops.Components.connectedComponents(path, "src", "dst",
+          maxIter = 2)
+      }
+    } == 0)
   }
 }

@@ -1,7 +1,8 @@
 package graft.io
 
 import graft.ops.IntervalExpand
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The reference's end-to-end batch job (entry point A, SURVEY §3.1),
   * re-expressed: discover the newest dated CSV -> densify intervals ->
@@ -31,15 +32,22 @@ object Pipeline {
       else IntervalExpand.faithful(readings)
     val ingestDate = Sources.filenameDate(
       new org.apache.hadoop.fs.Path(latest).getName).get.toString
-    // unpersist on every exit: a failed write must not pin one more
-    // amplified copy per retry attempt for the life of the JVM
-    val out = expanded.cache()
-    try {
-      val n = out.count()
+    written(expanded) { out =>
       if (idempotent) Sinks.writeIdempotent(out, targetDir, ingestDate)
       else Sinks.writeAppend(out, targetDir)
-      n
-    } finally out.unpersist()
+    }
+  }
+
+  /** Runs `write` once over `df` and returns the rows it wrote. The count
+    * is observed rather than recomputed: a separate count action would
+    * run the ×samples-amplified expansion twice, or pin a cached copy.
+    * The observer sits between the sort's exchange and the sink, in the
+    * write's result stage, where each partition's metrics are merged once,
+    * so a retried task is not counted twice. */
+  private def written(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** Step Functions `.sync` retry-or-fail analogue (the reference's state
@@ -115,13 +123,10 @@ object Pipeline {
       val files = priorSameDate ++ newFiles
       val readings = files.map(Sources.readCsv(spark, _)).reduce(_ unionByName _)
       val expanded =
-        (if (strict) IntervalExpand.strict(readings)
-         else IntervalExpand.faithful(readings)).cache()
-      try {
-        rows += expanded.count()
-        Sinks.writeIdempotent(expanded, targetDir, date.toString)
-        Ledger.record(spark, ledgerDir, newFiles)
-      } finally expanded.unpersist()
+        if (strict) IntervalExpand.strict(readings)
+        else IntervalExpand.faithful(readings)
+      rows += written(expanded)(Sinks.writeIdempotent(_, targetDir, date.toString))
+      Ledger.record(spark, ledgerDir, newFiles)
     }
     (byDate.flatMap(_._2.map(_._2)), rows)
   }

@@ -25,9 +25,19 @@ import org.apache.spark.sql.functions._
   * Scale notes: the expansion is a narrow map + generate (no shuffle); the
   * only shuffle is the optional global sort, which at 100 TB should be
   * replaced by per-partition (per-sensor / per-day) sort — hence `sort` is a
-  * parameter rather than hardwired.
+  * parameter rather than hardwired. The sort is a range exchange at an
+  * explicit width (`spark.sql.shuffle.partitions`) plus a local sort, the
+  * same physical plan as `orderBy`: AQE never coalesces a user-specified
+  * width, and would otherwise fold one day's small pre-expansion shuffle
+  * into a single task that then runs the whole expansion and write.
   */
 object IntervalExpand {
+
+  private def sortedByStart(df: DataFrame): DataFrame = {
+    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartitionByRange(width, col("start_time").asc)
+      .sortWithinPartitions(col("start_time").asc)
+  }
 
   /** Reference-faithful mode (quirks Q3/Q4/Q5 reproduced).
     * Mirrors pyspark_script.py:67-124 with the typed Column DSL (no string
@@ -43,7 +53,7 @@ object IntervalExpand {
     * idx * delta)` over IEEE doubles), so output is bit-for-bit the same.
     */
   def faithful(df: DataFrame, sort: Boolean = true): DataFrame = {
-    val sorted = if (sort) df.orderBy(col("start_time").asc) else df
+    val sorted = if (sort) sortedByStart(df) else df
     val withDelta = sorted.withColumn(
       "timedelta_per_sample",
       when(col("samples").isNotNull && col("samples") =!= 0,
@@ -68,7 +78,7 @@ object IntervalExpand {
     * `sample_idx` so output has a deterministic per-interval ordering key.
     */
   def strict(df: DataFrame, sort: Boolean = false): DataFrame = {
-    val sorted = if (sort) df.orderBy(col("start_time").asc) else df
+    val sorted = if (sort) sortedByStart(df) else df
     val startSec = unix_timestamp(col("start_time"))
     val endSec = unix_timestamp(col("end_time"))
     val valid = sorted.filter(col("samples").isNotNull && col("samples") > 0)

@@ -64,6 +64,20 @@ class IntervalExpandSpec extends SparkSpec {
       ("2023-07-03 01:00:13", "2023-07-03 01:00:20")))
   }
 
+  test("faithful: the range exchange keeps a global start_time order across partitions") {
+    // 240 one-sample intervals with distinct starts, landed out of order
+    val rows = new scala.util.Random(7).shuffle((0 until 240).toList).map { i =>
+      val t = java.time.LocalDateTime.of(2023, 7, 3, 0, 0).plusSeconds(i * 37L)
+      val f = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+      Row(t.format(f), t.plusSeconds(30).format(f), 1, i.toDouble)
+    }
+    val out = IntervalExpand.faithful(readings(rows))
+    val starts = out.collect().map(_.getAs[String]("start_time")).toSeq
+    assert(starts.size == 240 && starts == starts.sorted)
+    assert(out.rdd.getNumPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
   test("faithful: output schema drops bookkeeping columns, keeps carried values") {
     val df = readings(Seq(Row("2023-07-03 00:00:00", "2023-07-03 00:00:10", 1, 3.0)))
     val out = IntervalExpand.faithful(df)

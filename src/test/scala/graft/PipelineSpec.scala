@@ -152,9 +152,9 @@ class PipelineSpec extends SparkSpec {
     assert(Ledger.processed(spark, ledger).size == 3)
   }
 
-  test("a failing write releases the cached frame on every attempt") {
+  test("a failing write throws on every attempt and leaves the cache manager empty") {
     val dir = mkSource()
-    // a target under a regular file: the count succeeds, every write fails
+    // a target under a regular file: every write fails
     val blocker = Files.createTempFile(Paths.get("target"), "pipe_blocker", ".txt")
     spark.catalog.clearCache()
     intercept[Exception] {
@@ -166,6 +166,66 @@ class PipelineSpec extends SparkSpec {
       Pipeline.runIncremental(spark, dir, blocker.resolve("inc").toString, dir + "_ledger")
     }
     assert(spark.sharedState.cacheManager.isEmpty, "runIncremental leaked its cache")
+  }
+
+  private val header = "start_time,end_time,samples,temperature"
+
+  test("the returned row count is the written count on every path, quirks included") {
+    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_counted").toString
+    // 3 samples, Q3 (samples = 0 expands to 2 rows), Q4 (null samples: 0 rows)
+    Files.write(Paths.get(dir, "20230703_station_a.csv"), Seq(header,
+      "2023-07-03 00:00:00,2023-07-03 00:00:30,3,21.5",
+      "2023-07-03 01:00:00,2023-07-03 01:00:30,0,22.0",
+      "2023-07-03 02:00:00,2023-07-03 02:00:30,,23.0").mkString("\n").getBytes)
+    def onDisk(out: String) = spark.read.parquet(out).count()
+    val idem = Pipeline.run(spark, dir, dir + "_idem")
+    assert(idem == 5 && onDisk(dir + "_idem") == idem)
+    val appended = Pipeline.run(spark, dir, dir + "_append", idempotent = false)
+    assert(appended == 5 && onDisk(dir + "_append") == appended)
+    val (_, fresh) = Pipeline.runIncremental(spark, dir, dir + "_inc", dir + "_ledger")
+    assert(fresh == 5 && onDisk(dir + "_inc") == fresh)
+    // a same-date arrival rebuilds the partition: both files' rows count
+    Files.write(Paths.get(dir, "20230703_station_b.csv"), Seq(header,
+      "2023-07-03 03:00:00,2023-07-03 03:00:20,2,24.0").mkString("\n").getBytes)
+    val (files, rebuilt) = Pipeline.runIncremental(spark, dir, dir + "_inc", dir + "_ledger")
+    assert(files.size == 1 && rebuilt == 7 && onDisk(dir + "_inc") == rebuilt)
+  }
+
+  test("empty input writes 0 rows and never blocks on the row count") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    for ((kind, body) <- Seq("header-only" -> header.getBytes, "0-byte" -> Array.emptyByteArray);
+         strict <- Seq(false, true)) {
+      val dir = Files.createTempDirectory(Paths.get("target"), "pipe_nodata").toString
+      Files.write(Paths.get(dir, "20230703_measurement_data.csv"), body)
+      TimeLimits.failAfter(60.seconds) {
+        assert(Pipeline.run(spark, dir, dir + "_out", strict = strict) == 0,
+          s"run, $kind, strict=$strict")
+        val (files, rows) =
+          Pipeline.runIncremental(spark, dir, dir + "_inc", dir + "_ledger", strict = strict)
+        assert(files.size == 1 && rows == 0, s"runIncremental, $kind, strict=$strict")
+      }
+    }
+  }
+
+  test("the pipeline write keeps the sort's full width") {
+    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_width").toString
+    // 1,200 one-minute intervals with distinct starts: a small shuffle that
+    // AQE would coalesce to one partition if the sort let it
+    val rows = (0 until 1200).map { i =>
+      val t = java.time.LocalDateTime.of(2023, 7, 3, 0, 0).plusMinutes(i)
+      val f = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+      s"${t.format(f)},${t.plusMinutes(1).format(f)},2,${i % 40}.5"
+    }
+    Files.write(Paths.get(dir, "20230703_measurement_data.csv"),
+      (header +: rows).mkString("\n").getBytes)
+    val out = dir + "_out"
+    assert(Pipeline.run(spark, dir, out) == 2400)
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = new java.io.File(out, "ingest_date=2023-07-03").list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq
+    assert(parts.size == width, s"expected $width part files, got $parts")
   }
 
   test("loader stages the newest dated CSV into the source dir (S6)") {

@@ -1,8 +1,9 @@
 package graft
 
 import graft.ops.{Dedup, IntervalExpand}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
@@ -64,6 +65,25 @@ class PlanContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case e: ShuffleExchangeExec => e
     }
     assert(exchanges.isEmpty, s"expansion must not shuffle:\n$df")
+  }
+
+  test("interval expansion's sort keeps its width: one range exchange, never coalesced") {
+    val df = IntervalExpand.faithful(graft.queries.Flagship.syntheticReadings(spark, sfDir))
+    val exchanges = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchanges.size == 1, s"expected only the sort's exchange:\n$df")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    exchanges.head.outputPartitioning match {
+      case r: RangePartitioning => assert(r.numPartitions == width)
+      case p => fail(s"the sort's exchange must be a range exchange, got $p")
+    }
+    df.collect()
+    val coalesced = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case r: AQEShuffleReadExec if r.hasCoalescedPartition => r
+    }
+    assert(coalesced.isEmpty,
+      s"AQE coalesced the sort's shuffle:\n${df.queryExecution.executedPlan}")
   }
 
   test("native minhash signatures plan with zero exchanges") {

@@ -1,69 +1,20 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Persistence for driver-held index artifacts — the Bloom content-seen
-  * sketch, IVF coarse centroids, PQ codebooks — with the same lifecycle
-  * the MinHash signature index established (`Dedup.writeSignatureIndex`):
-  * write-once per corpus to a validated, sidecar-carrying location;
-  * refuse mismatched parameters loudly; survive layout maintenance.
-  *
-  * Why this exists: `BloomDedup.fitSketch` and `Similarity.fitIvf/fitIvfPq`
-  * each pay a full corpus pass. Before this store, the artifact they
-  * produce lived only in the fitting JVM — a driver restart (the normal
-  * event between a nightly fit and a week of probe batches) silently
-  * re-fit, turning the fit-once/probe-many contract into fit-per-session.
-  * Now the fit stamps bytes + a params sidecar next to the index data,
-  * and a fresh JVM probes the loaded artifact, bit-identical
-  * (SketchStoreSpec proves probe equality across a save/load cycle).
-  *
-  * Format choices, all driven by exact replay:
-  *  - floats serialize as `floatToRawIntBits` hex — text (greppable,
-  *    diffable) yet bit-exact; no decimal round-trip hazard.
-  *  - binary artifacts (the Bloom sketch) carry a CRC32 + length in the
-  *    params sidecar; a truncated or bit-rotted artifact is refused, not
-  *    probed (a corrupt Bloom filter fails SILENTLY — wrong false-
-  *    positive set, no exception — so integrity must be checked at load).
-  *  - params are caller-asserted at load: probing a sketch built with
-  *    different `window`/`numBits` would not error, it would just gate
-  *    garbage; the sidecar turns that silent failure into a refusal.
-  *  - sidecars are underscore-prefixed, so parquet data discovery
-  *    ignores them when they live inside an index's data directory.
+/** Codecs for the driver-held index artifacts: the Bloom content-seen
+  * sketch, IVF coarse centroids and PQ codebooks. Their lifecycle (params
+  * sidecar, refusal, compaction) is [[Artifacts]]; what is specific here
+  * is the format, chosen for exact replay:
+  *  - floats serialize as `floatToRawIntBits` hex: text, yet bit-exact,
+  *    with no decimal round-trip hazard;
+  *  - the Bloom sketch carries a CRC32 and length in its sidecar, because
+  *    a corrupt filter fails silently (a wrong false-positive set, no
+  *    exception), so integrity is checked at load.
+  * SketchStoreSpec proves probe equality across a save/load cycle.
   */
 object SketchStore {
-
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeText(spark: SparkSession, p: Path, text: String): Unit = {
-    val out = fs(spark, p).create(p, true)
-    try out.write(text.getBytes(UTF_8)) finally out.close()
-  }
-
-  private def readText(spark: SparkSession, p: Path): String = {
-    val f = fs(spark, p)
-    require(f.exists(p), s"missing artifact file $p")
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  private def parseKv(text: String): Map[String, String] =
-    text.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }.toMap
-
-  private def requireParams(have: Map[String, String],
-                            want: Map[String, String], what: String): Unit = {
-    val mismatched = want.keys.filter(k => have.get(k) != want.get(k))
-    require(mismatched.isEmpty,
-      s"$what params mismatch: artifact has " +
-        mismatched.map(k => s"$k=${have.getOrElse(k, "<absent>")}").mkString(", ") +
-        s", caller expects " + mismatched.map(k => s"$k=${want(k)}").mkString(", ") +
-        " — probing with mismatched parameters fails silently, refusing")
-  }
 
   private def crc32(bytes: Array[Byte]): Long = {
     val c = new java.util.zip.CRC32(); c.update(bytes); c.getValue
@@ -79,17 +30,13 @@ object SketchStore {
   // ------------------------------------------------------------------
 
   /** Persist a fitted Bloom sketch (`BloomDedup.fitSketch` bytes) to
-    * `dir/sketch.bin` + `dir/_bloom_params`. Data first, sidecar second
-    * — a crash between the two leaves a loud, refusable state (loads
-    * demand the sidecar), exactly the signature-index contract. */
+    * `dir/sketch.bin` + `dir/_bloom_params`. */
   def saveBloom(spark: SparkSession, dir: String, sketch: Array[Byte],
                 window: Int, estItems: Long, numBits: Long): Unit = {
-    val bin = new Path(dir, "sketch.bin")
-    val out = fs(spark, bin).create(bin, true)
-    try out.write(sketch) finally out.close()
-    writeText(spark, new Path(dir, "_bloom_params"),
-      s"window=$window\nestItems=$estItems\nnumBits=$numBits\n" +
-        s"length=${sketch.length}\ncrc32=${crc32(sketch)}\n")
+    Artifacts.writeBytes(spark, new Path(dir, "sketch.bin"), sketch)
+    Artifacts.writeSidecar(spark, dir, bloomParams(window, estItems, numBits) ++
+      Map("length" -> sketch.length.toString, "crc32" -> crc32(sketch).toString),
+      BloomParams)
   }
 
   /** Load a persisted Bloom sketch, refusing parameter mismatches and
@@ -97,52 +44,47 @@ object SketchStore {
     * probe with; they must equal the ones the sketch was fitted with. */
   def loadBloom(spark: SparkSession, dir: String,
                 window: Int, estItems: Long, numBits: Long): Array[Byte] = {
-    val have = parseKv(readText(spark, new Path(dir, "_bloom_params")))
-    requireParams(have, Map("window" -> window.toString,
-      "estItems" -> estItems.toString, "numBits" -> numBits.toString),
-      s"bloom sketch at $dir")
-    val bin = new Path(dir, "sketch.bin")
-    val f = fs(spark, bin)
-    require(f.exists(bin), s"sidecar present but sketch.bin missing at $dir")
-    val len = f.getFileStatus(bin).getLen.toInt
-    val bytes = new Array[Byte](len)
-    val in = f.open(bin)
-    try in.readFully(0, bytes) finally in.close()
-    require(len.toString == have("length") &&
+    val have = Artifacts.requireParams(spark, dir,
+      bloomParams(window, estItems, numBits), BloomParams, "bloom sketch").params
+    val bytes = Artifacts.readBytes(spark, new Path(dir, "sketch.bin"))
+    require(bytes.length.toString == have("length") &&
         crc32(bytes).toString == have("crc32"),
       s"bloom sketch at $dir failed integrity check " +
-        s"(length $len vs ${have("length")}, crc ${crc32(bytes)} vs " +
+        s"(length ${bytes.length} vs ${have("length")}, crc ${crc32(bytes)} vs " +
         s"${have("crc32")}) — a corrupt filter probes garbage silently, refusing")
     bytes
   }
+
+  private val BloomParams = "_bloom_params"
+
+  private def bloomParams(window: Int, estItems: Long, numBits: Long) =
+    Map("window" -> window.toString, "estItems" -> estItems.toString,
+      "numBits" -> numBits.toString)
 
   // ------------------------------------------------------------------
   // IVF centroids (stamped inside the inverted-list parquet directory)
   // ------------------------------------------------------------------
 
   /** Stamp IVF coarse centroids as a `_ivf_centroids` sidecar inside the
-    * index's parquet directory (underscore file — data discovery ignores
-    * it). One hex-float row per centroid. */
+    * index's parquet directory. One hex-float row per centroid. */
   def saveIvfCentroids(spark: SparkSession, indexDir: String,
                        centroids: Array[Array[Float]]): Unit = {
     require(centroids.nonEmpty, "empty centroid set")
     val dim = centroids.head.length
     require(centroids.forall(_.length == dim), "ragged centroids")
-    val body = centroids.map(_.map(hex).mkString(" ")).mkString("\n")
-    writeText(spark, new Path(indexDir, "_ivf_centroids"),
-      s"nLists=${centroids.length}\ndim=$dim\n$body\n")
+    Artifacts.writeSidecar(spark, indexDir,
+      Map("nLists" -> centroids.length.toString, "dim" -> dim.toString),
+      "_ivf_centroids", centroids.toSeq.map(_.map(hex).mkString(" ")))
   }
 
   /** Load centroids stamped by [[saveIvfCentroids]]; bit-exact. */
   def loadIvfCentroids(spark: SparkSession, indexDir: String): Array[Array[Float]] = {
-    val text = readText(spark, new Path(indexDir, "_ivf_centroids"))
-    val kv = parseKv(text)
-    val rows = text.linesIterator.filterNot(_.contains("="))
-      .filter(_.nonEmpty).toArray
+    val Artifacts.Sidecar(kv, rows) =
+      Artifacts.readSidecar(spark, indexDir, "_ivf_centroids")
     require(rows.length == kv("nLists").toInt,
       s"_ivf_centroids at $indexDir declares nLists=${kv("nLists")} but " +
         s"carries ${rows.length} rows — truncated sidecar, refusing")
-    val cents = rows.map(_.split(" ").map(unhex))
+    val cents = rows.map(_.split(" ").map(unhex)).toArray
     require(cents.forall(_.length == kv("dim").toInt),
       s"_ivf_centroids at $indexDir has rows shorter than dim=${kv("dim")}")
     cents
@@ -156,20 +98,18 @@ object SketchStore {
     * subDim), then the m·ks sub-centroids in (subspace-major, code-minor)
     * order, one hex-float row each. */
   def savePqCodebook(spark: SparkSession, indexDir: String,
-                     cb: graft.ops.ProductQuantizer.PqCodebook): Unit = {
-    val body = cb.centroids.flatMap(_.map(_.map(hex).mkString(" "))).mkString("\n")
-    writeText(spark, new Path(indexDir, "_pq_codebook"),
-      s"m=${cb.m}\nks=${cb.ks}\nsubDim=${cb.subDim}\n$body\n")
-  }
+                     cb: graft.ops.ProductQuantizer.PqCodebook): Unit =
+    Artifacts.writeSidecar(spark, indexDir,
+      Map("m" -> cb.m.toString, "ks" -> cb.ks.toString,
+        "subDim" -> cb.subDim.toString),
+      "_pq_codebook", cb.centroids.toSeq.flatMap(_.map(_.map(hex).mkString(" "))))
 
   /** Load a codebook stamped by [[savePqCodebook]]; bit-exact. */
   def loadPqCodebook(spark: SparkSession,
                      indexDir: String): graft.ops.ProductQuantizer.PqCodebook = {
-    val text = readText(spark, new Path(indexDir, "_pq_codebook"))
-    val kv = parseKv(text)
+    val Artifacts.Sidecar(kv, rows) =
+      Artifacts.readSidecar(spark, indexDir, "_pq_codebook")
     val (m, ks, subDim) = (kv("m").toInt, kv("ks").toInt, kv("subDim").toInt)
-    val rows = text.linesIterator.filterNot(_.contains("="))
-      .filter(_.nonEmpty).toArray
     require(rows.length == m * ks,
       s"_pq_codebook at $indexDir declares m*ks=${m * ks} rows, has ${rows.length}")
     val flat = rows.map(_.split(" ").map(unhex))
@@ -177,41 +117,5 @@ object SketchStore {
       s"_pq_codebook at $indexDir has rows shorter than subDim=$subDim")
     graft.ops.ProductQuantizer.PqCodebook(m, ks, subDim,
       Array.tabulate(m, ks)((mi, j) => flat(mi * ks + j)))
-  }
-
-  // ------------------------------------------------------------------
-  // Maintenance that keeps sidecars alive
-  // ------------------------------------------------------------------
-
-  /** [[Maintenance.compact]] for an artifact-carrying index directory:
-    * the generic path's rename swap carries the old dir — sidecars
-    * included — away with the deleted backup (the exact hazard
-    * `Dedup.compactSignatureIndex` documents). This wrapper snapshots
-    * every top-level `_`-prefixed regular file's bytes before the
-    * rewrite and re-stamps any that went missing after, so IVF/PQ index
-    * compaction preserves `_ivf_centroids`/`_pq_codebook` (and any
-    * future sidecar) without per-artifact code. */
-  def compactPreservingSidecars(spark: SparkSession, dir: String,
-                                targetFileBytes: Long = 128L * 1024 * 1024,
-                                shuffle: Boolean = false): Maintenance.LayoutStats = {
-    val root = new Path(dir)
-    val f = fs(spark, root)
-    val sidecars = f.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_"))
-      .map { s =>
-        val in = f.open(s.getPath)
-        val bytes = new Array[Byte](s.getLen.toInt)
-        try in.readFully(0, bytes) finally in.close()
-        s.getPath.getName -> bytes
-      }
-    val stats = Maintenance.compact(spark, dir, targetFileBytes, shuffle)
-    sidecars.foreach { case (name, bytes) =>
-      val p = new Path(dir, name)
-      if (!f.exists(p)) { // no-op compactions never moved the dir
-        val out = f.create(p, true)
-        try out.write(bytes) finally out.close()
-      }
-    }
-    stats
   }
 }

@@ -139,13 +139,11 @@ object Dedup {
     val append = mode == org.apache.spark.sql.SaveMode.Append
     require(append || mode == org.apache.spark.sql.SaveMode.Overwrite,
       s"signature index supports Overwrite (build) or Append (grow), not $mode")
-    if (append) validateIndexParams(spark, path, shingleN, perms, rowsPerBand)
+    if (append) requireIndexParams(spark, path, shingleN, perms, rowsPerBand)
     bandedBuckets(minHashSignatures(docs, idCol, textCol, shingleN, perms),
         rowsPerBand, perms)
       .write.mode(mode).parquet(path)
-    // data first, sidecar second (parquet Overwrite deletes the dir, so a
-    // pre-written sidecar cannot survive it); a crash between the two
-    // leaves a loud, repairable state — see [[stampIndexParams]]
+    // after the data: parquet Overwrite deletes the dir, sidecar included
     if (!append) stampIndexParams(spark, path, shingleN, perms, rowsPerBand)
   }
 
@@ -157,70 +155,35 @@ object Dedup {
     * the sidecar exists to prevent. */
   def stampIndexParams(spark: org.apache.spark.sql.SparkSession, path: String,
                        shingleN: Int, perms: Int, rowsPerBand: Int): Unit =
-    writeIndexParams(spark, path, shingleN, perms, rowsPerBand)
+    graft.io.Artifacts.writeSidecar(spark, path,
+      banding(shingleN, perms, rowsPerBand), IndexParams)
 
-  private def paramsPath(path: String) = new org.apache.hadoop.fs.Path(path, "_lsh_params")
+  private val IndexParams = "_lsh_params"
+  private val Restamp = " (recover with stampIndexParams)"
 
-  private def writeIndexParams(spark: org.apache.spark.sql.SparkSession,
-                               path: String, shingleN: Int, perms: Int,
-                               rowsPerBand: Int): Unit = {
-    val p = paramsPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"shingleN=$shingleN\nperms=$perms\nrowsPerBand=$rowsPerBand\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readIndexParams(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Map[String, String] = {
-    val p = paramsPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _lsh_params sidecar under $path — not a signature index, or a " +
-        "crash between data and sidecar writes (recover with stampIndexParams)")
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }.toMap
-  }
-
-  private[graft] def validateIndexParams(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, shingleN: Int, perms: Int,
-                                  rowsPerBand: Int): Unit = {
-    val have = readIndexParams(spark, path)
-    val want = Map("shingleN" -> shingleN.toString, "perms" -> perms.toString,
+  private def banding(shingleN: Int, perms: Int, rowsPerBand: Int) =
+    Map("shingleN" -> shingleN.toString, "perms" -> perms.toString,
       "rowsPerBand" -> rowsPerBand.toString)
-    require(have == want,
-      s"banding params mismatch for index at $path: index has $have, caller passed $want " +
-        "— probing with different banding silently matches nothing")
-  }
+
+  /** Refuse an index whose `_lsh_params` differ from the caller's banding:
+    * probing with different banding silently matches nothing. */
+  private[graft] def requireIndexParams(spark: org.apache.spark.sql.SparkSession,
+      path: String, shingleN: Int, perms: Int, rowsPerBand: Int): Unit =
+    graft.io.Artifacts.requireParams(spark, path,
+      banding(shingleN, perms, rowsPerBand), IndexParams, "banding", Restamp)
 
   /** Compact a signature index's accumulated per-batch append files —
     * the maintenance step the continuous ingest loop needs: every
     * [[writeSignatureIndex]] Append adds one small file set, and after
     * thousands of batches the probe's index scan pays per-file open
     * costs that dwarf the bytes (the StreamIngestGrowthProbe caveat).
-    * Delegates the rewrite + atomic swap to [[graft.io.Maintenance.compact]]
-    * but PRESERVES the `_lsh_params` sidecar, which the generic path
-    * would silently strip (parquet data discovery ignores underscore
-    * files, and the rename swap carries the old dir — sidecar included —
-    * away with the deleted backup): params are read before the rewrite
-    * and re-stamped after. A crash between swap and re-stamp leaves the
-    * same loud, `stampIndexParams`-repairable state as a crash inside
-    * [[writeSignatureIndex]] — probes refuse rather than mismatch. */
+    * Refuses a sidecar-less index before rewriting it. */
   def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String,
                             targetFileBytes: Long = 128L * 1024 * 1024,
                             shuffle: Boolean = false): graft.io.Maintenance.LayoutStats = {
-    val params = readIndexParams(spark, path)
-    val stats = graft.io.Maintenance.compact(spark, path, targetFileBytes, shuffle)
-    val p = paramsPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) // no-op compactions never moved the sidecar
-      writeIndexParams(spark, path, params("shingleN").toInt,
-        params("perms").toInt, params("rowsPerBand").toInt)
-    stats
+    graft.io.Artifacts.readSidecar(spark, path, IndexParams, Restamp)
+    graft.io.Artifacts.compact(spark, path, targetFileBytes, shuffle)
   }
 
   /** Candidate near-dup pairs between a NEW batch and an indexed corpus:
@@ -239,7 +202,7 @@ object Dedup {
                                 indexPath: String, shingleN: Int = 3,
                                 perms: Int = 32, rowsPerBand: Int = 8,
                                 broadcastNew: Boolean = true): DataFrame = {
-    validateIndexParams(spark, indexPath, shingleN, perms, rowsPerBand)
+    requireIndexParams(spark, indexPath, shingleN, perms, rowsPerBand)
     incrementalCandidatePairsAgainst(spark.read.parquet(indexPath),
       newDocs, idCol, textCol, shingleN, perms, rowsPerBand, broadcastNew)
   }
@@ -248,7 +211,7 @@ object Dedup {
     * the multi-batch streaming probe loads (and lineage-truncates) the
     * index ONCE per run instead of re-planning the parquet scan inside
     * every micro-batch (r17, guide §2.4). The caller is responsible for
-    * `validateIndexParams` when the frame came from an index path; the
+    * `requireIndexParams` when the frame came from an index path; the
     * join itself is unchanged, so outputs are identical. */
   def incrementalCandidatePairsAgainst(index: DataFrame,
                                 newDocs: DataFrame, idCol: String, textCol: String,
@@ -378,7 +341,7 @@ object Dedup {
 
   /** Verify-replay DuckDB oracle for [[simHashPairs]] over a SIDECAR
     * parquet of recorded signatures (the over-cap spillover —
-    * [[graft.io.ReplaySidecar]]): same trust boundary as the literal
+    * [[graft.io.Artifacts.replayOnce]]): same trust boundary as the literal
     * variant, but the replay must scale past the all-pairs form, so
     * candidates come from a banded join. Independence is preserved by
     * banding on a DIFFERENT disjoint 64-bit partition than Spark's
@@ -391,7 +354,7 @@ object Dedup {
     * here. Hamming, threshold, and ordering are recomputed as in the
     * brute-force variant. */
   def simHashSidecarOracleSql(path: String, maxHamming: Int): String = {
-    val p = graft.io.ReplaySidecar.sqlPath(path)
+    val p = graft.io.Artifacts.sqlPath(path)
     // bv = Σ_k ((h >> (4k + band)) & 1) << k, unrolled — bit k of the
     // interleaved band value is signature bit 4k+band (two's-complement
     // arithmetic shift keeps (h >> m) & 1 = bit m for negative h too)
@@ -558,11 +521,11 @@ object Dedup {
   }
 
   /** The over-cap candidate source: recorded pairs from a
-    * [[graft.io.ReplaySidecar]] parquet ((stage,) a, b columns) instead
+    * [[graft.io.Artifacts.replayOnce]] parquet ((stage,) a, b columns) instead
     * of inline VALUES — same trust boundary, any corpus size. */
   private def sidecarCandSrc(path: String, staged: Boolean): String =
     s"SELECT ${if (staged) "stage, " else ""}a, b FROM " +
-      s"read_parquet('${graft.io.ReplaySidecar.sqlPath(path)}/*.parquet')"
+      s"read_parquet('${graft.io.Artifacts.sqlPath(path)}/*.parquet')"
 
   /** The cand/tk/sh/scored CTE block over an arbitrary candidate-row
     * source (VALUES literals below the cap, a sidecar parquet above it)
@@ -605,7 +568,7 @@ object Dedup {
   }
 
   /** [[verifyReplayOracleSql]] with the recorded candidates read back
-    * from a [[graft.io.ReplaySidecar]] parquet instead of VALUES
+    * from a [[graft.io.Artifacts.replayOnce]] parquet instead of VALUES
     * literals — the over-cap path, exact at any corpus size. */
   def verifyReplayOracleSqlFrom(path: String, staged: Boolean,
                                 leftCol: String, rightCol: String,

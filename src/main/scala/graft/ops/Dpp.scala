@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Partitioned-layout materialization for dynamic partition pruning — the
@@ -13,23 +12,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * — never planned, never opened. `q_join_dpp` exercises the path
   * end-to-end; PlanContractSpec pins the `dynamicpruning` scan filter.
   *
-  * The layout is written once per (corpus, JVM) — the [[Bucketing]]
-  * lifecycle: pay the partitioned write at layout time, every downstream
-  * query prunes for free.
+  * The layout is a corpus artifact ([[graft.io.Artifacts]]): pay the
+  * partitioned write once, every downstream query prunes for free.
   */
 object Dpp {
 
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Idempotently materialize `df` hive-partitioned by `partCol` under the
-    * JVM temp dir, keyed by `dir` (one layout per corpus per JVM), and
-    * return the layout path. */
+  /** Materialize `df` hive-partitioned by `partCol`, once per content of
+    * corpus `dir`, and return the layout path. */
   def ensurePartitioned(dir: String, df: DataFrame, partCol: String): String =
-    layouts.computeIfAbsent(dir, _ => {
-      val path = new Path(System.getProperty("java.io.tmpdir"),
-        "graft_dpp_" + Bucketing.tableSuffix(dir)).toString
+    graft.io.Artifacts.once(dir, "graft_dpp_layout") {
+      val path = graft.io.Artifacts.path(dir, "graft_dpp_layout")
       df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
       path
-    })
+    }
 }

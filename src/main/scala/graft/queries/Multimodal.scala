@@ -28,7 +28,7 @@ object Multimodal {
   /** Literal cap for the generated verify-replay oracles (the LlmOps
     * ReplayOracleCap stance): recording is bounded to cap+1 rows
     * regardless of corpus size; an over-cap corpus records the frame as
-    * a parquet SIDECAR ([[graft.io.ReplaySidecar]] — executor write, no
+    * a parquet SIDECAR ([[graft.io.Artifacts.replayOnce]] — executor write, no
     * driver collect) that the generated oracle reads back, so the
     * replay stays exact at any scale instead of falling back to
     * rows-only. `Right` = inline literals, `Left` = sidecar path. */
@@ -409,7 +409,7 @@ object Multimodal {
         val rec = hashed.select(col("doc_id"), col("dhash"))
           .limit(MultimodalReplayCap + 1).collect().toSeq
         if (rec.size > MultimodalReplayCap)
-          Left(graft.io.ReplaySidecar.writeOnce(dir, "phash_sigs")(
+          Left(graft.io.Artifacts.replayOnce(dir, "phash_sigs")(
             hashed.select(col("doc_id"), col("dhash").as("h"))))
         else Right(rec.map(r => (r.getLong(0), r.getLong(1))))
       })
@@ -492,7 +492,7 @@ object Multimodal {
         val rec = decoded.select(col("doc_id"), col("png_bytes"))
           .limit(MultimodalReplayCap + 1).collect().toSeq
         if (rec.size > MultimodalReplayCap)
-          Left(graft.io.ReplaySidecar.writeOnce(dir, "png_sizes")(
+          Left(graft.io.Artifacts.replayOnce(dir, "png_sizes")(
             decoded.select(col("doc_id"), col("png_bytes"))))
         else Right(rec.map(r => (r.getLong(0), r.getInt(1))))
       })
@@ -518,7 +518,7 @@ object Multimodal {
   private def phashSidecarOracleSql(path: String): String =
     phashOracleFrom(s"""
          SELECT doc_id, h
-         FROM read_parquet('${graft.io.ReplaySidecar.sqlPath(path)}/*.parquet')""")
+         FROM read_parquet('${graft.io.Artifacts.sqlPath(path)}/*.parquet')""")
 
   /** The shared pairing replay: candidates from a BAND-PAIR (2-of-8)
     * self-join on the SAME contiguous-byte bands Spark uses —
@@ -582,7 +582,7 @@ object Multimodal {
   private def decodeSidecarOracleSql(path: String): String =
     decodeOracleFrom(s"""
          SELECT doc_id, png_bytes
-         FROM read_parquet('${graft.io.ReplaySidecar.sqlPath(path)}/*.parquet')""")
+         FROM read_parquet('${graft.io.Artifacts.sqlPath(path)}/*.parquet')""")
 
   // px_sum via hex-pair byte decode, not per-bit get_bit lists: the
   // bit form builds an 8·len element list per document, and at the

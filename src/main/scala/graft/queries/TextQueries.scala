@@ -284,11 +284,8 @@ object TextQueries {
     // the same static replay SQL family as q_bpe_train.
     "q_bpe_apply" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      // fit-once merge-table memo (r16): APPLY consumes the merges as a
-      // fitted tokenizer model — the ivfIndexFor/bloomSketchFor
-      // corpus-artifact lifecycle (deterministic seeded train; the same
-      // corpus never refits in one JVM). q_bpe_train deliberately keeps
-      // refitting: training is that query's declared computation.
+      // APPLY consumes the merges as a fitted tokenizer model artifact
+      // (bpeMergesFor); q_bpe_train deliberately keeps refitting
       val merges = bpeMergesFor(s, dir,
         () => graft.ops.Bpe.trainBatched(docs, "text", BpeMerges))
       val vocab = graft.ops.Bpe.tokenizeVocab(docs, "text", merges)
@@ -680,15 +677,14 @@ object TextQueries {
         .filter(length(col("word")) >= 1)
         .select("source", "word").distinct()
       val sizes = sw.groupBy("source").agg(count(lit(1)).as("n"))
-      // word→source-set pairs from the persisted backbone artifact
-      // (GraphBackbone — built once per corpus, scanned per run; the
+      // word→source-set pairs from a persisted edge-list artifact; the
       // sizes rollup still derives fresh, which re-verifies the token
-      // stream on every gate run)
-      graft.io.GraphBackbone.pairsFor(s, dir, "source_overlap",
+      // stream on every gate run
+      s.read.parquet(graft.io.Artifacts.writeOnce(s, dir, "source_overlap",
           Map("fact" -> "documents", "basket" -> "word",
             "item" -> "source", "maxBasket" -> "64")) {
           graft.ops.Triangles.coPairs(sw, "word", "source", maxBasket = 64)
-        }
+        })
         .join(sizes.select(col("source").as("src"), col("n").as("n_a")), "src")
         .join(sizes.select(col("source").as("dst"), col("n").as("n_b")), "dst")
         .select(col("src").as("source_a"), col("dst").as("source_b"),
@@ -1115,32 +1111,19 @@ object TextQueries {
     * (Bpe.oracleSql) so the query and its replay stay in lockstep. */
   private[queries] val BpeMerges = 8
 
-  /** Per-corpus BPE merge-table ARTIFACT (q_bpe_apply's fitted tokenizer
-    * model). r16 kept the fitted merges in a JVM-lifetime in-memory memo;
-    * the r16 verdict flagged that as skirting the timed region (the
-    * untimed warmup populated it, so the timed passes never touched the
-    * model at all). r17 moves it to the explicit corpus-lifecycle shape
-    * the graph backbone uses: the fit runs once per (JVM, corpus) and is
-    * PERSISTED as a parquet model artifact, and every invocation — timed
-    * bench passes included — loads the model back from the artifact
-    * before applying it. The bench therefore times "load model + apply",
-    * which is exactly what a production tokenizer-apply job pays (its
-    * trainer ships merges as a file; apply never refits). q_bpe_train
-    * still refits every invocation — training is its declared
-    * computation. */
-  private val bpeMergeArtifact =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** q_bpe_apply's fitted tokenizer model, persisted as a merge-table
+    * artifact and loaded back on every invocation, timed bench passes
+    * included: the bench times "load model + apply", what a production
+    * tokenizer-apply job pays (its trainer ships merges as a file; apply
+    * never refits). q_bpe_train still refits every invocation — training
+    * is its declared computation. */
   private[queries] def bpeMergesFor(s: org.apache.spark.sql.SparkSession,
       dir: String,
       fit: () => Seq[graft.ops.Bpe.Merge]): Seq[graft.ops.Bpe.Merge] = {
-    val path = bpeMergeArtifact.computeIfAbsent(dir, _ => {
-      val p = graft.io.ReplaySidecar.sidecarPath(dir, "bpe_merge_model")
-      graft.ops.Bpe.mergeTable(s, fit())
-        .coalesce(1).write.mode("overwrite").parquet(p)
-      p
-    })
-    // the per-invocation model LOAD — inside the timed region by design
+    val path = graft.io.Artifacts.writeOnce(s, dir, "bpe_merge_model",
+        Map("merges" -> BpeMerges.toString)) {
+      graft.ops.Bpe.mergeTable(s, fit()).coalesce(1)
+    }
     s.read.parquet(path).orderBy("merge_rank").collect().toSeq.map { r =>
       graft.ops.Bpe.Merge(r.getAs[Int]("merge_rank"), r.getAs[String]("lhs"),
         r.getAs[String]("rhs"), r.getAs[Long]("n_occurrences"))
@@ -1188,19 +1171,16 @@ object TextQueries {
   final case class KlRef(kept: Seq[String], buckets: Seq[(String, Long)],
                          totC: Long)
 
-  /** Fit-once memo for [[KlRef]] over the static 4/5ths of `documents`
+  /** The [[KlRef]] fitted over the static 4/5ths of `documents`
     * (doc_id % 5 =!= 0 — the corpus side of the catalog's streaming
-    * splits), keyed by corpus dir. One corpus-scale aggregation; the two
-    * collects are K- and (K+1)-bounded (CollectAuditSpec). The reference
-    * <oov> mass is what gives a NOVEL batch token a finite score; a
-    * reference whose vocabulary fits entirely inside K has no <oov> row
-    * and a novel-token batch bucket simply drops from the inner join —
-    * the documented clamp for the infinite-KL case. */
-  private val klRefs =
-    new java.util.concurrent.ConcurrentHashMap[String, KlRef]()
-
+    * splits), once per corpus content. One corpus-scale aggregation; the
+    * two collects are K- and (K+1)-bounded (CollectAuditSpec). The
+    * reference <oov> mass is what gives a NOVEL batch token a finite
+    * score; a reference whose vocabulary fits entirely inside K has no
+    * <oov> row and a novel-token batch bucket simply drops from the inner
+    * join — the documented clamp for the infinite-KL case. */
   def klRefFor(s: org.apache.spark.sql.SparkSession, dir: String): KlRef =
-    klRefs.computeIfAbsent(dir, { _ =>
+    graft.io.Artifacts.once(dir, "kl_ref") {
       // persisted: tc feeds BOTH the kept-vocabulary TakeOrdered and the
       // bucket-marginal aggregation — one corpus-scale tokenize+aggregate,
       // then two vocab-sized reads (review catch: without the persist the
@@ -1222,7 +1202,7 @@ object TextQueries {
           .sortBy(_._1)
         KlRef(kept, buckets, buckets.map(_._2).sum)
       } finally tc.unpersist()
-    })
+    }
 
   private val markerCase = {
     // CASE chain mirroring TextAnalysis.langId (en > es > fr > de > zh on ties)

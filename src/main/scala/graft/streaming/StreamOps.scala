@@ -369,7 +369,7 @@ object StreamOps {
       // run and lineage-truncated — every batch previously re-planned and
       // re-scanned the index parquet for its probe join. Built inside the
       // timed region per invocation; the probe join itself is unchanged.
-      Dedup.validateIndexParams(s, indexPath, 3, 32, 8)
+      Dedup.requireIndexParams(s, indexPath, 3, 32, 8)
       val index = s.read.parquet(indexPath).localCheckpoint()
       val docs = s.read.parquet(s"$dir/documents.parquet")
       (batch, write) =>

@@ -33,13 +33,13 @@ class CollectAuditSpec extends AnyFunSuite {
     "ScaleUpMain.scala" -> (1,
       "scale-up tooling (not a query operator): distinct user ids of the source corpus"),
     "LlmOps.scala" -> (3,
-      "oracle memos: pairsOf (v2/v3 pipeline candidate memos, bounded by within-day near-dup volume) + recordPairs (limit(ReplayOracleCap+1)-bounded per stage; over-cap spills the full set to a ReplaySidecar parquet via executor write) + simhash signatures (limit(ReplayOracleCap+1)-bounded; over-cap likewise sidecars)"),
+      "oracle memos: pairsOf (v2/v3 pipeline candidate memos, bounded by within-day near-dup volume) + recordPairs (limit(ReplayOracleCap+1)-bounded per stage; over-cap spills the full set to an Artifacts.replayOnce parquet via executor write) + simhash signatures (limit(ReplayOracleCap+1)-bounded; over-cap likewise sidecars)"),
     "Events.scala" -> (1,
       "sketch-tiles oracle memo (one row per event type, schema-bounded); RFM thresholds now arrive via OrderStats.quantilesDiscMulti's audited collects"),
     "Relational.scala" -> (2,
       "oracle memos: approx-distinct (one row per return flag) + approx-quantiles (flags x percentiles) — both schema-bounded"),
     "Multimodal.scala" -> (2,
-      "oracle memos: dHash signatures + PNG byte sizes, both limit(MultimodalReplayCap+1)-bounded collects; over-cap spills to a ReplaySidecar parquet"),
+      "oracle memos: dHash signatures + PNG byte sizes, both limit(MultimodalReplayCap+1)-bounded collects; over-cap spills to an Artifacts.replayOnce parquet"),
     "TextQueries.scala" -> (3,
       "KlRef fit memo: kept vocabulary (limit(KlVocabTopK)) + bucket marginals (<= K+1 rows by the <oov> collapse) — both K-bounded by construction; + the BPE merge-model load (<= BpeMerges rows — the persisted tokenizer artifact read back per q_bpe_apply invocation)"))
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.SketchStore
+import graft.io.{Artifacts, SketchStore}
 import graft.ops.{BloomDedup, ProductQuantizer => PQ, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -96,7 +96,7 @@ class SketchStoreSpec extends SparkSpec {
     assert(results(ix, cb) == results(ix2, cb2))
   }
 
-  test("compactPreservingSidecars keeps _ivf_centroids through the swap") {
+  test("compact keeps _ivf_centroids through the swap") {
     val e = spark.read.parquet(s"$sf001/embeddings.parquet").cache()
     val root = tmp("ivfcompact")
     // a flat (unpartitioned) artifact dir exercises the generic path:
@@ -109,7 +109,7 @@ class SketchStoreSpec extends SparkSpec {
       .write.parquet(flat)
     SketchStore.saveIvfCentroids(spark, flat,
       SketchStore.loadIvfCentroids(spark, s"$root/part"))
-    SketchStore.compactPreservingSidecars(spark, flat,
+    Artifacts.compact(spark, flat,
       targetFileBytes = 256L * 1024 * 1024)
     // sidecar survived the rename swap and still parses bit-exactly
     val cents = SketchStore.loadIvfCentroids(spark, flat)

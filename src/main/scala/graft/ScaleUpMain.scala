@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up generator: writes an N× copy of a TESTDATA.md
@@ -63,13 +63,7 @@ object ScaleUpMain {
     val hotK = if (args.length > 5) args(5).toInt else 4
     require(!skewMode || (alphaPct >= 1 && alphaPct <= 90 && hotK >= 1),
       s"zipf mode needs alphaPct in [1,90] and hotK >= 1: $alphaPct/$hotK")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(32)
 
     def write(name: String, df: DataFrame, files: Int): Unit = {
       df.coalesce(files).write.mode(SaveMode.Overwrite)

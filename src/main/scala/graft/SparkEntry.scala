@@ -30,6 +30,19 @@ object SparkEntry {
       (StreamingQueries.defs, StreamingQueries.oracles)
     )
 
+  /** The local session every entry point runs on: `local[cores]`, one
+    * shuffle partition per core, UTC, no UI, WARN logging. */
+  def localSession(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_interval_expand")(spark, "/root/testdata/sf0.001")

@@ -1,7 +1,5 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the batch pipeline: `runMain graft.io.PipelineMain
   * <sourceDir> <targetDir> [--strict] [--append] [--incremental]`.
   * `--incremental` processes every pending dated file (bookmark ledger at
@@ -14,16 +12,7 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: PipelineMain <sourceDir> <targetDir> [--strict] [--append] [--incremental]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try {
       if (args.contains("--incremental")) {
         val (files, rows) = Pipeline.runIncremental(spark, args(0), args(1),

@@ -176,7 +176,7 @@ object Dedup {
     * the maintenance step the continuous ingest loop needs: every
     * [[writeSignatureIndex]] Append adds one small file set, and after
     * thousands of batches the probe's index scan pays per-file open
-    * costs that dwarf the bytes (the StreamIngestGrowthProbe caveat).
+    * costs that dwarf the bytes.
     * Refuses a sidecar-less index before rewriting it. */
   def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String,

@@ -52,44 +52,32 @@ object PageRank {
     * CACHE CONTRACT: the returned plan reads two persisted frames (the
     * repartitioned edge list and the vertex frame) that stay in the
     * CacheManager until the caller clears them — `Bench` calls
-    * `spark.catalog.clearCache()` per query; long-lived sessions should
-    * use [[fixedPointWithRelease]] and invoke the release callback once
-    * the result has been consumed. */
-  def fixedPoint(edges: DataFrame, iters: Int,
-      dampMicro: Long = 850000000L): DataFrame =
-    fixedPointWithRelease(edges, iters, dampMicro)._1
-
-  /** [[fixedPoint]] plus an explicit cache-release callback: call it
-    * AFTER the returned DataFrame has been fully consumed (an unpersist
-    * before the action would silently replay the edge scan + repartition
-    * once per iteration level). Blocking=false: release is a hint, the
-    * executors drop blocks asynchronously.
+    * `spark.catalog.clearCache()` per query.
     *
-    * SUBSTRATE (r17 note): an RDD-loop variant (the [[Components]]
-    * pattern — one shared HashPartitioner, narrow per-round joins) was
-    * built and MEASURED BOTH WAYS this round, and the unrolled Catalyst
-    * plan below is the keeper. Under full materialization (noop sink,
-    * every rank computed) the RDD loop is ~1.7x faster on the 1.17M-edge
-    * q_graph_pagerank input (3.4-3.9 s vs 5.8-7.1 s, interleaved A/B,
-    * R17PageRankAB). But the lazy unrolled plan composes with whatever
-    * the CONSUMER actually needs: under a counting/row-multiplicity
-    * consumer Catalyst prunes the per-round rank expressions and
-    * collapses grouped-unique left joins, while the RDD loop always pays
-    * the full 5-round boxed-tuple compute up front (driver-side counts
-    * during construction included). Full-catalog quiet-box benches
-    * measured the swap as a 2.18 s -> 3.45 s regression for
-    * q_graph_pagerank, so the Catalyst substrate stays; the same swap
-    * DOES pay where the loop was action-per-round (Bfs, KCore,
-    * Components — per-round localCheckpoint/count forces full compute
-    * either way, and the RDD loop removes the per-round planning). */
-  def fixedPointWithRelease(edges: DataFrame, iters: Int,
-      dampMicro: Long = 850000000L): (DataFrame, () => Unit) = {
+    * SUBSTRATE: an RDD-loop variant (the [[Components]] pattern — one
+    * shared HashPartitioner, narrow per-round joins) was built and
+    * measured both ways, and the unrolled Catalyst plan below is the
+    * keeper. Under full materialization (noop sink, every rank computed)
+    * the RDD loop is ~1.7x faster on the 1.17M-edge q_graph_pagerank
+    * input (3.4-3.9 s vs 5.8-7.1 s, interleaved A/B). But the lazy
+    * unrolled plan composes with whatever the CONSUMER actually needs:
+    * under a counting/row-multiplicity consumer Catalyst prunes the
+    * per-round rank expressions and collapses grouped-unique left joins,
+    * while the RDD loop always pays the full 5-round boxed-tuple compute
+    * up front (driver-side counts during construction included).
+    * Full-catalog quiet-box benches measured the swap as a
+    * 2.18 s -> 3.45 s regression for q_graph_pagerank, so the Catalyst
+    * substrate stays; the same swap DOES pay where the loop was
+    * action-per-round (Bfs, KCore, Components — per-round
+    * localCheckpoint/count forces full compute either way, and the RDD
+    * loop removes the per-round planning). */
+  def fixedPoint(edges: DataFrame, iters: Int,
+      dampMicro: Long = 850000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val (e, nodes) = prepare(edges, dampMicro)
     var ranks = nodes.withColumn("r", expr(s"${R}L div nn"))
     for (_ <- 1 to iters) ranks = round(ranks, e, nodes, dampMicro)
-    val out = ranks.select(col("node"), col("r").as("rank_micro"))
-    (out, () => { e.unpersist(false); nodes.unpersist(false); () })
+    ranks.select(col("node"), col("r").as("rank_micro"))
   }
 
   /** The iteration-invariant inputs of the distributed recurrence: the
@@ -149,7 +137,7 @@ object PageRank {
     * r'(v) = (R−d) div nn + (d·s(v)) div R — all nonneg long arithmetic,
     * where Scala `/` ≡ Spark `div`; long sums are order-invariant, so
     * the driver loop is bit-identical to the join plan (pinned by
-    * PageRankLocalSpec against [[fixedPoint]] on random graphs).
+    * PageRankSpec against [[fixedPoint]] on random graphs).
     *
     * The collect is limit(maxEdges+1)-bounded and REFUSES an over-cap
     * graph rather than truncating it — the caller's K-bound is a

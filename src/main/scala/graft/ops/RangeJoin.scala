@@ -23,17 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object RangeJoin {
 
-  /** Join `points` to `intervals` where `points.ptCol` falls in
-    * `[startCol, endCol)`. Columns from both sides survive; timestamps
-    * are compared at their native precision. Malformed intervals
-    * (end before start) match nothing: their bin rows exist (sequence
-    * steps down) but the exact recheck is vacuously false. */
   /** Bin id of a timestamp. The intermediate cast("timestamp") lets NTZ
     * timestamps bin too (NTZ -> BIGINT is not a legal direct cast);
-    * session TZ is UTC. Public so measurement code (ScaleProbeMain's
-    * candidate count) uses THIS binning, not a hand-rolled copy that
-    * could drift. */
-  def bin(ts: Column, binSeconds: Long): Column =
+    * session TZ is UTC. */
+  private def bin(ts: Column, binSeconds: Long): Column =
     floor(ts.cast("timestamp").cast("long") / binSeconds)
 
   /** The equi-join candidate set before the exact recheck — the join the
@@ -47,6 +40,11 @@ object RangeJoin {
     pt.join(iv, Seq("__bin"))
   }
 
+  /** Join `points` to `intervals` where `points.ptCol` falls in
+    * `[startCol, endCol)`. Columns from both sides survive; timestamps
+    * are compared at their native precision. Malformed intervals
+    * (end before start) match nothing: their bin rows exist (sequence
+    * steps down) but the exact recheck is vacuously false. */
   def pointInInterval(points: DataFrame, ptCol: String,
                       intervals: DataFrame, startCol: String, endCol: String,
                       binSeconds: Long): DataFrame =

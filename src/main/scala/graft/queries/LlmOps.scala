@@ -253,7 +253,7 @@ object LlmOps {
   private val IvfNLists = 8
   private val IvfNProbe = 2
   /** PQ codebook size per subspace — retuned 16 → 64 by the round-16
-    * (ks, rerank) JOINT sweep (PqJointSweepProbe at sf1: recall@3
+    * (ks, rerank) JOINT sweep (at sf1: recall@3
     * 0.31 → 0.41 at the adcRerank shortlist for an ~11% one-time fit
     * cost; ks=256 buys only +0.04 more for ~10× the fit — SCALE.md
     * records the surface). */
@@ -1635,50 +1635,6 @@ object LlmOps {
   private[graft] val RrfDepth = 20
   private[graft] val RrfK0 = 60
   private[graft] val RrfTopK = 10
-
-  /** Measurement seam (r17, R17CurateSplit): the v2 chain's stage
-    * boundaries as labeled count-thunks, so the construct-phase wall can
-    * be ATTRIBUTED per stage instead of guessed from job soup. Mirrors
-    * [[curateChain]]'s stages 1-4 structurally (same day slice, same
-    * ops) without persisting or checkpointing, so each thunk times one
-    * clean execution of its subtree. Probe-only — never on a query
-    * path. */
-  private[graft] def curateStageProbe(s: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(String, () => Long)] = {
-    val day = tbl(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-    val d = tbl(s, dir, "documents")
-    val sub = when(col("doc_id") % 7 === 0, lit("cdn."))
-      .when(col("doc_id") % 7 === 1, lit("www."))
-      .otherwise(lit(""))
-    val hosted = day.withColumn("registered_domain",
-      array_join(slice(split(
-        concat(sub, col("source"), lit(".example.com")), "\\."), -3, 3), "."))
-    val bl = s.createDataFrame(DayBlockedDomains.map(Tuple1(_)))
-      .toDF("blocked_domain")
-    val unblocked = hosted.join(broadcast(bl),
-      hosted("registered_domain") === bl("blocked_domain"), "left_anti")
-    val byUrl = Window.partitionBy(xxhash64(col("canonical_url")))
-    val urlKept = withCanonicalUrl(unblocked)
-      .withColumn("_uk", min("doc_id").over(byUrl))
-      .filter(col("doc_id") === col("_uk"))
-      .drop("_uk", "canonical_url", "registered_domain")
-    val corpus = d.filter(col("doc_id") % 5 =!= 0)
-    val seenHigh = graft.ops.BloomDedup
-      .seenBlocks(corpus, urlKept, "doc_id", "text", bloomSketchFor(s, dir))
-      .filter(col("seen_ppm") >= ContentSeenPpm)
-      .select("doc_id")
-    val fresh = urlKept.join(broadcast(seenHigh), Seq("doc_id"), "left_anti")
-    val sigs = Dedup.minHashSignatures(fresh, "doc_id", "text")
-    val cands = Dedup.lshCandidatePairs(sigs)
-    val dupDrop = Dedup
-      .verifyCandidates(fresh, "doc_id", "text", cands, "id_a", "id_b")
-      .select(col("id_b").as("doc_id")).distinct()
-    Seq(
-      "stage1-2 blocklist+url-window (urlKept)" -> (() => urlKept.count()),
-      "stage3 bloom content-seen (seenHigh)" -> (() => seenHigh.count()),
-      "stage4a LSH candidates" -> (() => cands.count()),
-      "stage4b verify (dupDrop)" -> (() => dupDrop.count()))
-  }
 
   /** Stages 1-8 of the crawl-day pipelines — ONE lazy plan over the
     * admitted `day` slice (v2 passes the raw %5==0 day; v3 its

@@ -175,25 +175,6 @@ object Relational {
     (v1, v2)
   }
 
-  /** Inputs + join/agg body of `q_join_bucketed`, shared with
-    * `BucketProbe` so the probe's measured shuffle numbers stay the
-    * numbers of THIS plan — a drifted manual copy would silently measure
-    * something else. */
-  private[graft] def ordersProjection(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    tbl(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-
-  private[graft] def customerProjection(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    tbl(s, dir, "customer").select("c_custkey", "c_mktsegment")
-
-  private[graft] def bucketedJoinAgg(o: org.apache.spark.sql.DataFrame,
-      c: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    o.hint("merge").join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy("c_custkey")
-      .agg(count(lit(1)).as("n_orders"),
-        round(sum("o_totalprice"), 2).as("revenue"))
-
   /** Executed round counts of the convergence-driven graph loops, keyed
     * by corpus dir — the q_dedup_semantic recording pattern: the BFS /
     * k-core queries iterate to their (unique, confluent) fixpoints and
@@ -632,10 +613,17 @@ object Relational {
     "q_join_bucketed" -> ((s, dir) => {
       val sfx = graft.ops.Bucketing.tableSuffix(dir)
       val ob = graft.ops.Bucketing.ensureBucketed(s, s"graft_orders_bkt_$sfx",
-        ordersProjection(s, dir), buckets = 8, key = "o_custkey")
+        tbl(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
+        buckets = 8, key = "o_custkey")
       val cb = graft.ops.Bucketing.ensureBucketed(s, s"graft_customer_bkt_$sfx",
-        customerProjection(s, dir), buckets = 8, key = "c_custkey")
-      bucketedJoinAgg(s.table(ob), s.table(cb)).orderBy("c_custkey")
+        tbl(s, dir, "customer").select("c_custkey", "c_mktsegment"),
+        buckets = 8, key = "c_custkey")
+      s.table(ob).hint("merge")
+        .join(s.table(cb), col("o_custkey") === col("c_custkey"))
+        .groupBy("c_custkey")
+        .agg(count(lit(1)).as("n_orders"),
+          round(sum("o_totalprice"), 2).as("revenue"))
+        .orderBy("c_custkey")
     }),
     "q_join_multiway" -> ((s, dir) => {
       val c = tbl(s, dir, "customer")

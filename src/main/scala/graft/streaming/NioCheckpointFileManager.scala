@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 /** [[CheckpointFileManager]] for checkpoints on a LOCAL (POSIX) path,
   * backed by `java.nio` instead of the Hadoop FileContext stack.
   *
-  * Why it exists (r17, guide §1/§6 — measured, R17FsLatencyProbe): with
+  * Why it exists (r17, guide §1/§6 — measured): with
   * no native-hadoop library (`NativeIO.isAvailable == false`, the
   * standard situation on vanilla JVM deployments), every
   * permission-bearing Hadoop local-FS operation falls back to forking a

@@ -173,8 +173,8 @@ object StreamOps {
     }
   }
 
-  /** Checkpoint-manager selection (r17, measured in R17FsLatencyProbe /
-    * scaladoc of [[NioCheckpointFileManager]]): every [[ckpt]] location
+  /** Checkpoint-manager selection (r17, measured; see the scaladoc of
+    * [[NioCheckpointFileManager]]): every [[ckpt]] location
     * is a local POSIX path by construction (TempDirs.base is a
     * java.nio Path), and on local paths the default FileContext manager
     * pays ~45 ms of no-native-hadoop shell forks PER atomic write —

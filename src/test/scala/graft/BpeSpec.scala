@@ -129,12 +129,14 @@ class BpeSpec extends SparkSpec {
       Seq("the quick brown fox jumps over the lazy dog",
         "pack my box with five dozen liquor jugs",
         "the five boxing wizards jump quickly"))
-    for (texts <- corpora; m <- Seq(1, 2, 4, 32)) {
+    for (texts <- corpora) {
       val docs = texts.toDF("text")
       val seq8 = Bpe.train(docs, "text", 12)
-      val bat8 = Bpe.trainBatched(docs, "text", 12, batchM = m)
-      assert(bat8 == seq8,
-        s"batchM=$m diverged on $texts:\nbatched $bat8\nsequential $seq8")
+      for (m <- Seq(1, 2, 4, 32)) {
+        val bat8 = Bpe.trainBatched(docs, "text", 12, batchM = m)
+        assert(bat8 == seq8,
+          s"batchM=$m diverged on $texts:\nbatched $bat8\nsequential $seq8")
+      }
     }
   }
 

@@ -64,8 +64,8 @@ class BroadcastAuditSpec extends AnyFunSuite {
     ("HeavyHitters.scala", "candidates") -> (1, "CAPPED: Misra-Gries summary, <= k rows per partition merged"),
     ("BloomDedup.scala", "bytes") -> (1, "SKETCH: serialized bloom filter, numBits/8 bytes (4 MiB default) — corpus-size-independent artifact"),
     ("LlmOps.scala", "bytes") -> (1, "SKETCH: q_dedup_bloom's fitted filter broadcast — numBits/8 bytes, corpus-size-independent"),
-    ("LlmOps.scala", "bl") -> (3, "LITERAL: curated domain blocklists (BlockedDomains + the v2 pipeline's DayBlockedDomains — fixed artifacts, never corpus-scale; third site is curateStageProbe's measurement twin of the v2 chain)"),
-    ("LlmOps.scala", "seenHigh") -> (2, "OUTPUT: day docs above the content-seen threshold — high-overlap dup volume, never day-scale (chain site + curateStageProbe's measurement twin)"),
+    ("LlmOps.scala", "bl") -> (2, "LITERAL: curated domain blocklists (BlockedDomains + the v2 pipeline's DayBlockedDomains — fixed artifacts, never corpus-scale)"),
+    ("LlmOps.scala", "seenHigh") -> (1, "OUTPUT: day docs above the content-seen threshold — high-overlap dup volume, never day-scale"),
     ("LlmOps.scala", "dupDrop") -> (1, "OUTPUT: verified near-dup drop ids — near-dup volume, never day-scale"),
     ("LlmOps.scala", "bounds") -> (1, "ONE_ROW: the v3 day's (lo, step) staging bounds"),
     ("LlmOps.scala", "refDf") -> (1, "SCHEMA: the fit-once KL reference — K+1 bucket rows by construction"),

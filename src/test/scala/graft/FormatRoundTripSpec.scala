@@ -3,7 +3,6 @@ package graft
 import graft.io.{Sinks, Sources}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Round-trip every interchange format the engine speaks: values, types,
   * and row sets must survive parquet, orc, json-lines, and csv (the text
@@ -23,8 +22,7 @@ class FormatRoundTripSpec extends SparkSpec {
   test("parquet/orc/json/csv round-trip values and types") {
     val df = rows.toDF("id", "s", "v", "flag")
     for (fmt <- Seq("parquet", "orc", "json", "csv")) {
-      val dir = Files.createTempDirectory(s"graft_fmt_$fmt").toFile
-      dir.deleteOnExit()
+      val dir = new java.io.File(tmpDir(s"graft_fmt_$fmt"))
       val path = new java.io.File(dir, "data").getAbsolutePath
       Sinks.writeFormat(df, path, fmt, SaveMode.Overwrite)
       val back = fmt match {
@@ -46,8 +44,7 @@ class FormatRoundTripSpec extends SparkSpec {
     // files, dropped columns null-fill new ones. (At 100 TB turn
     // mergeSchema on per-read, not session-wide: it footer-scans every
     // file in the listing, so pair it with partition pruning.)
-    val dir = Files.createTempDirectory("graft_evolve").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmpDir("graft_evolve"))
     val path = new java.io.File(dir, "t").getAbsolutePath
     Seq((1L, "a")).toDF("id", "old_col").write.parquet(path)
     Seq((2L, 9.5)).toDF("id", "new_col").write.mode(SaveMode.Append).parquet(path)
@@ -63,8 +60,7 @@ class FormatRoundTripSpec extends SparkSpec {
   }
 
   test("idempotent sink threads storage options through to the writer") {
-    val dir = Files.createTempDirectory("graft_sink_opts").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmpDir("graft_sink_opts"))
     val path = new java.io.File(dir, "t").getAbsolutePath
     val df = rows.toDF("id", "s", "v", "flag")
     // a real writer option proves the pass-through plumbing; an encryption

@@ -17,7 +17,7 @@ class GraphBackboneSpec extends SparkSpec {
   private val sf001 = "/root/testdata/sf0.001"
 
   private def copyOfSf001(prefix: String): String = {
-    val dir = graft.io.TempDirs.createDeletedOnExit(prefix).toPath
+    val dir = java.nio.file.Paths.get(tmpDir(prefix))
     new java.io.File(sf001).listFiles.foreach(f =>
       java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
     dir.toString

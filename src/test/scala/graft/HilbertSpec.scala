@@ -78,7 +78,7 @@ class HilbertSpec extends SparkSpec {
     val pts = spark.range(256L * 256)
       .select((col("id") % 256).as("x"), (col("id") / 256).as("y"))
       .repartition(8)
-    val dir = java.nio.file.Files.createTempDirectory("hilr").toString + "/t"
+    val dir = tmpDir("hilr") + "/t"
     pts.withColumn("h", Hilbert.dValue(col("x"), col("y"), bits = 8))
       .repartitionByRange(16, col("h")).sortWithinPartitions("h")
       .write.parquet(dir)
@@ -99,7 +99,7 @@ class HilbertSpec extends SparkSpec {
 
   test("clustered write: range-partitioned files, contents preserved") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hil").toString + "/t"
+    val dir = tmpDir("hil") + "/t"
     val df = (0 until 4096).map(i => (i.toLong, (i * 2654435761L) % 4096L))
       .toDF("a", "b")
     Hilbert.writeClustered(df, dir,

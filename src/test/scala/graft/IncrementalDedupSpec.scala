@@ -32,7 +32,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   ).toDF("doc_id", "text")
 
   test("new batch finds corpus near-dups; corpus pairs are never formed") {
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_test_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_test_")
     Dedup.writeSignatureIndex(corpus, "doc_id", "text", idx)
     val pairs = Dedup.incrementalCandidatePairs(spark, batch, "doc_id", "text", idx)
       .as[(Long, Long)].collect().toSet
@@ -46,7 +46,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("append grows the index: the next batch matches the previous one") {
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_test2_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_test2_")
     Dedup.writeSignatureIndex(corpus, "doc_id", "text", idx)
     // steady-state loop: probe batch 1, then append it to the index
     Dedup.writeSignatureIndex(batch, "doc_id", "text", idx, mode = SaveMode.Append)
@@ -85,7 +85,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("compactSignatureIndex merges append accretion, preserves the sidecar, changes nothing") {
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_test6_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_test6_")
     Dedup.writeSignatureIndex(corpus, "doc_id", "text", idx)
     // simulate the continuous loop: 6 tiny appended batches = 6 extra file sets
     for (i <- 0 until 6)
@@ -116,7 +116,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("mismatched banding params are refused via the index sidecar") {
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_test3_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_test3_")
     Dedup.writeSignatureIndex(corpus, "doc_id", "text", idx) // defaults: 3/32/8
     // internally-consistent but DIFFERENT banding: without the sidecar
     // check this would silently probe garbage buckets and match nothing
@@ -136,7 +136,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("unsupported save modes are refused; stampIndexParams repairs a sidecar-less index") {
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_test5_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_test5_")
     Dedup.writeSignatureIndex(corpus, "doc_id", "text", idx)
     // Ignore would no-op the data write but restamp the sidecar — refused
     val e = intercept[IllegalArgumentException](
@@ -161,7 +161,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the corpus-sized index must stream through its scan into a broadcast
     // join with the (tiny) batch's buckets — an index-side shuffle here
     // would move the whole corpus index per daily batch
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_plan_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_plan_")
     Dedup.writeSignatureIndex(corpus, "doc_id", "text", idx)
     val plan = Dedup.incrementalCandidatePairs(spark, batch, "doc_id", "text", idx)
       .queryExecution.executedPlan
@@ -181,7 +181,7 @@ class IncrementalDedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (301L, base + " tonight maybe"), // intra-batch duplicate
       (302L, "yet another unrelated document discussing compilers and type systems today")
     ).toDF("doc_id", "text")
-    val idx = graft.io.TempDirs.createDeletedOnExit("lsh_idx_test4_").getAbsolutePath
+    val idx = tmpDir("lsh_idx_test4_")
     Dedup.writeSignatureIndex(corpus.where(col("doc_id") === 3L), "doc_id", "text", idx)
     val vsCorpus = Dedup.incrementalCandidatePairs(spark, dupBatch, "doc_id", "text", idx)
       .as[(Long, Long)].collect().toSet

@@ -10,12 +10,8 @@ class MaintenanceSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), prefix).toString + "/data"
-
   test("compact collapses a many-small-file layout and preserves contents exactly") {
-    val dir = freshDir("compact")
+    val dir = tmpDir("compact") + "/data"
     val df = spark.range(0, 10000).select(col("id"), (col("id") % 97).as("k"))
     df.repartition(40).write.parquet(dir) // the small-file mess
     val before = Maintenance.layoutStats(spark, dir)
@@ -38,7 +34,7 @@ class MaintenanceSpec extends SparkSpec {
     // thousands-of-files leaf: the narrow coalesce(n) path would read
     // n-wide (documented tradeoff); shuffle=true rewrites via
     // repartition(n) so the scan keeps one task per input split
-    val dir = freshDir("compact_wide")
+    val dir = tmpDir("compact_wide") + "/data"
     val df = spark.range(0, 20000).select(col("id"), (col("id") % 31).as("k"))
     df.repartition(128).write.parquet(dir)
     val before = Maintenance.layoutStats(spark, dir)
@@ -52,7 +48,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact is a no-op on an already-compact layout") {
-    val dir = freshDir("compact_noop")
+    val dir = tmpDir("compact_noop") + "/data"
     spark.range(0, 1000).toDF("id").coalesce(1).write.parquet(dir)
     val before = Maintenance.layoutStats(spark, dir)
     assert(before.nFiles == 1)
@@ -63,7 +59,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact refuses a partitioned root instead of flattening it") {
-    val dir = freshDir("compact_part")
+    val dir = tmpDir("compact_part") + "/data"
     spark.range(0, 100).select(col("id"), (col("id") % 2).as("p"))
       .write.partitionBy("p").parquet(dir)
     intercept[IllegalArgumentException](Maintenance.compact(spark, dir))

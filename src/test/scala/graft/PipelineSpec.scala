@@ -8,8 +8,13 @@ import java.nio.file.{Files, Paths}
   * fail-fast on empty input (Q1/Q2), idempotent re-run (Q8). */
 class PipelineSpec extends SparkSpec {
 
+  /** A source dir one level inside a registered temp dir, so the `_out`
+    * and `_ledger` siblings a test derives from it are deleted with it. */
+  private def srcDir(prefix: String): String =
+    Files.createDirectory(Paths.get(tmpDir(prefix), "src")).toString
+
   private def mkSource(): String = {
-    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_src").toString
+    val dir = srcDir("pipe_src")
     def write(name: String, rows: Seq[String]): Unit =
       Files.write(Paths.get(dir, name),
         ("start_time,end_time,samples,temperature" +: rows).mkString("\n").getBytes)
@@ -33,7 +38,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("empty source fails fast (Q1/Q2 fixed: no silent fallback)") {
-    val empty = Files.createTempDirectory(Paths.get("target"), "pipe_empty").toString
+    val empty = srcDir("pipe_empty")
     intercept[IllegalStateException] {
       Pipeline.run(spark, empty, empty + "_out")
     }
@@ -82,7 +87,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("incremental run unions same-date files into one partition write") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_samedate").toString
+    val dir = srcDir("pipe_samedate")
     def write(name: String, row: String): Unit =
       Files.write(Paths.get(dir, name),
         s"start_time,end_time,samples,temperature\n$row\n".getBytes)
@@ -97,7 +102,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("incremental run keeps processed rows when a same-date file arrives LATER") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_latedate").toString
+    val dir = srcDir("pipe_latedate")
     def write(name: String, row: String): Unit =
       Files.write(Paths.get(dir, name),
         s"start_time,end_time,samples,temperature\n$row\n".getBytes)
@@ -155,7 +160,7 @@ class PipelineSpec extends SparkSpec {
   test("a failing write throws on every attempt and leaves the cache manager empty") {
     val dir = mkSource()
     // a target under a regular file: every write fails
-    val blocker = Files.createTempFile(Paths.get("target"), "pipe_blocker", ".txt")
+    val blocker = Files.createFile(Paths.get(tmpDir("pipe_blocker"), "blocker.txt"))
     spark.catalog.clearCache()
     intercept[Exception] {
       Pipeline.runWithRetry(spark, dir, blocker.resolve("out").toString,
@@ -171,7 +176,7 @@ class PipelineSpec extends SparkSpec {
   private val header = "start_time,end_time,samples,temperature"
 
   test("the returned row count is the written count on every path, quirks included") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_counted").toString
+    val dir = srcDir("pipe_counted")
     // 3 samples, Q3 (samples = 0 expands to 2 rows), Q4 (null samples: 0 rows)
     Files.write(Paths.get(dir, "20230703_station_a.csv"), Seq(header,
       "2023-07-03 00:00:00,2023-07-03 00:00:30,3,21.5",
@@ -197,7 +202,7 @@ class PipelineSpec extends SparkSpec {
     implicit val signaler: Signaler = ThreadSignaler
     for ((kind, body) <- Seq("header-only" -> header.getBytes, "0-byte" -> Array.emptyByteArray);
          strict <- Seq(false, true)) {
-      val dir = Files.createTempDirectory(Paths.get("target"), "pipe_nodata").toString
+      val dir = srcDir("pipe_nodata")
       Files.write(Paths.get(dir, "20230703_measurement_data.csv"), body)
       TimeLimits.failAfter(60.seconds) {
         assert(Pipeline.run(spark, dir, dir + "_out", strict = strict) == 0,
@@ -210,7 +215,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("the pipeline write keeps the sort's full width") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_width").toString
+    val dir = srcDir("pipe_width")
     // 1,200 one-minute intervals with distinct starts: a small shuffle that
     // AQE would coalesce to one partition if the sort let it
     val rows = (0 until 1200).map { i =>
@@ -230,7 +235,7 @@ class PipelineSpec extends SparkSpec {
 
   test("loader stages the newest dated CSV into the source dir (S6)") {
     import graft.io.Loader
-    val staging = Files.createTempDirectory(Paths.get("target"), "stage").toString
+    val staging = srcDir("stage")
     def write(name: String, rows: Seq[String]): Unit =
       Files.write(Paths.get(staging, name),
         ("start_time,end_time,samples,temperature" +: rows).mkString("\n").getBytes)
@@ -253,7 +258,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("retry wrapper retries then rethrows (sync retry-or-fail contract)") {
-    val empty = Files.createTempDirectory(Paths.get("target"), "retry_empty").toString
+    val empty = srcDir("retry_empty")
     // empty source: every attempt fails -> last failure is rethrown
     intercept[IllegalStateException] {
       Pipeline.runWithRetry(spark, empty, empty + "_out", maxAttempts = 2, backoffMs = 1)
@@ -266,7 +271,7 @@ class PipelineSpec extends SparkSpec {
   test("compaction merges small files without changing the data") {
     import graft.io.Maintenance
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("target"), "compact").toString + "/t"
+    val dir = tmpDir("compact") + "/t"
     // write deliberately fragmented: 16 partitions -> 16 small files
     (1L to 1000L).toDF("id").repartition(16).write.parquet(dir)
     val sumBefore = spark.read.parquet(dir).agg(org.apache.spark.sql.functions.sum("id"))
@@ -282,7 +287,7 @@ class PipelineSpec extends SparkSpec {
   test("clustered write partitions by key and sorts within files") {
     import graft.io.Maintenance
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("target"), "clustered").toString + "/t"
+    val dir = tmpDir("clustered") + "/t"
     val df = (1L to 500L).map(i => (i % 3, (i * 37) % 101, i)).toDF("p", "c", "id")
     Maintenance.writeClustered(df, dir, "p", Seq("c"))
     // directory layout gives pruning

@@ -179,9 +179,9 @@ class PlanContractSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // on the partition column against a broadcast probe set, so dynamic
     // partition pruning must reach the file scan: at 100 TB this is the
     // difference between reading nProbe/nLists of the corpus and all of it
-    val dir = graft.io.TempDirs.createDeletedOnExit("graft_ivf_spec_")
+    val dir = tmpDir("graft_ivf_spec_")
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val index = graft.ops.Similarity.fitIvf(e, nLists = 4, dir.getAbsolutePath)
+    val index = graft.ops.Similarity.fitIvf(e, nLists = 4, dir)
     val probe = graft.ops.Similarity.probeIvf(
       spark, index, e.filter(col("vec_id") < 5), k = 3, nProbe = 2)
     val scans = collectWithSubqueries(probe.queryExecution.executedPlan) {

@@ -83,7 +83,7 @@ class RecallFloorSpec extends SparkSpec {
     val exact = pairSet(Similarity.bruteForceTopK(queries, e, 3),
       "query_id", "neighbor_id")
     val index = Similarity.fitIvf(e, nLists = 8,
-      graft.io.TempDirs.createDeletedOnExit("graft_ivf_recall_").getAbsolutePath)
+      tmpDir("graft_ivf_recall_"))
     val ivf = pairSet(Similarity.probeIvf(spark, index, queries, k = 3, nProbe = 2),
       "query_id", "neighbor_id")
     val recall = (ivf & exact).size.toDouble / exact.size

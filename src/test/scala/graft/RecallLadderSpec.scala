@@ -46,19 +46,17 @@ class RecallLadderSpec extends SparkSpec {
     info(f"sf1 LSH multi-probe recall@3 = $lsh%.4f")
     assert(lsh >= 0.50, f"LSH rung recall $lsh%.4f below floor (measured 0.56)")
 
-    val ivfDir = graft.io.TempDirs
-      .createDeletedOnExit("graft_ladder_ivf_").getAbsolutePath
+    val ivfDir = tmpDir("graft_ladder_ivf_")
     val ix = Similarity.fitIvf(e, nLists = 8, ivfDir)
     val ivf = recall(pairSet(
       Similarity.probeIvf(spark, ix, queries, k = 3, nProbe = 2)))
     info(f"sf1 IVF nProbe=2 recall@3 = $ivf%.4f")
     assert(ivf >= 0.45, f"IVF rung recall $ivf%.4f below floor (measured 0.51)")
 
-    val pqDir = graft.io.TempDirs
-      .createDeletedOnExit("graft_ladder_ivfpq_").getAbsolutePath
+    val pqDir = tmpDir("graft_ladder_ivfpq_")
     // ks=64: the round-16 joint-sweep operating point (the catalog's) —
     // +0.10 recall over ks=16 at the adcRerank shortlist for ~11% more
-    // one-time fit (PqJointSweepProbe; SCALE.md records the surface)
+    // one-time fit (SCALE.md records the surface)
     val (pix, cb) = Similarity.fitIvfPq(e, nLists = 8, m = 8, ks = 64,
       dim = 64, pqDir)
     val fixed = recall(pairSet(Similarity.probeIvfPq(e, queries, 3, pix, cb,

@@ -40,7 +40,7 @@ class Round11QueriesSpec extends SparkSpec {
       (30L, (1 to 35).map(i => s"c$i").mkString(" ")))
       .toDF("doc_id", "text")
     docs.createOrReplaceTempView("documents_stub")
-    val dir = java.nio.file.Files.createTempDirectory("pdedup").toString
+    val dir = tmpDir("pdedup")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q_dedup_paragraph")(spark, dir).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
@@ -84,7 +84,7 @@ class Round11QueriesSpec extends SparkSpec {
     def ts(s: Int) = new java.sql.Timestamp(t0.getTime + s * 1000L)
     // one user: 1.00 held 10s, 2.00 held 20s, 3.00 unterminated
     // -> twa = (100*10 + 200*20) div 30 = 166 cents
-    val dir = java.nio.file.Files.createTempDirectory("twa").toString
+    val dir = tmpDir("twa")
     Seq((1L, ts(0), 7L, "view", 1.0, "{}"),
         (2L, ts(10), 7L, "view", 2.0, "{}"),
         (3L, ts(30), 7L, "view", 3.0, "{}"))
@@ -118,7 +118,7 @@ class Round11QueriesSpec extends SparkSpec {
     def ts(h: Int) = new java.sql.Timestamp(t0.getTime + h * 3600000L)
     // one user: view,click,view,click,purchase ->
     // view->click x2 (p=1.0), click->view x1, click->purchase x1 (p=0.5)
-    val dir = java.nio.file.Files.createTempDirectory("markov").toString
+    val dir = tmpDir("markov")
     Seq((1L, ts(0), 7L, "view", 0.0, "{}"),
         (2L, ts(1), 7L, "click", 0.0, "{}"),
         (3L, ts(2), 7L, "view", 0.0, "{}"),
@@ -149,7 +149,7 @@ class Round11QueriesSpec extends SparkSpec {
     //   num = 3*400-3*600 = -600, den = 3*5-9 = 6, slope = -100000
     // user 8 rises: hours 0,2 at 1.00/2.00 -> num 200, den 4, slope 50000
     // user 9: both events inside one hour -> den = 0, row filtered
-    val dir = java.nio.file.Files.createTempDirectory("trend").toString
+    val dir = tmpDir("trend")
     Seq((1L, ts(0), 7L, "view", 3.0, "{}"),
         (2L, ts(60), 7L, "view", 2.0, "{}"),
         (3L, ts(120), 7L, "view", 1.0, "{}"),
@@ -179,7 +179,7 @@ class Round11QueriesSpec extends SparkSpec {
     // (b,a) is PRUNED and backs off to the unigram term alone — the
     // fixture exercises both scoring branches.
     val docs = Seq((1L, "a b a b"), (2L, "a b")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bigram").toString
+    val dir = tmpDir("bigram")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q_text_bigram_lm")(spark, dir).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap

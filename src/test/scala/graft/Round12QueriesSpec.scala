@@ -16,7 +16,7 @@ class Round12QueriesSpec extends SparkSpec {
     //  row 2: (128*200 + 64*100)*1000 div 192 = 32000000/192 -> 166666
     //         (nonzero remainder: pins truncation)
     //  row 3: (128*400 + 64*200 + 32*100)*1000 div 224 = 300000 exactly
-    val dir = java.nio.file.Files.createTempDirectory("ewma").toString
+    val dir = tmpDir("ewma")
     Seq((7L, 1L, ts(1), 1.00), (7L, 2L, ts(2), 2.00), (7L, 3L, ts(3), 4.00))
       .toDF("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -32,7 +32,7 @@ class Round12QueriesSpec extends SparkSpec {
     import spark.implicits._
     // srcA vocab {a b c d}, srcB {c d e f}, srcC {x}:
     //  A-B share {c d}: 2*1e6 div (4+4-2) = 333333; C overlaps nothing
-    val dir = java.nio.file.Files.createTempDirectory("sovl").toString
+    val dir = tmpDir("sovl")
     Seq((1L, "a b c d", "en", "srcA"), (2L, "c d e f", "en", "srcB"),
         (3L, "x", "en", "srcC"))
       .toDF("doc_id", "text", "lang", "source")

@@ -10,7 +10,7 @@ class Round13QueriesSpec extends SparkSpec {
 
   test("q_filter_blocklist: registered-domain block catches every subdomain variant") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("blk").toString
+    val dir = tmpDir("blk")
     // src3 is blocklisted; doc_ids 0/1/3 hit the cdn./www./bare subdomain
     // branches -- ALL must drop (a subdomain must not evade a domain-level
     // block). srcX is unlisted; its cdn. variant (doc 7, 7%7=0) must KEEP
@@ -26,7 +26,7 @@ class Round13QueriesSpec extends SparkSpec {
 
   test("q_text_kneser_ney: hand-traced discount + continuation arithmetic") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("kn").toString
+    val dir = tmpDir("kn")
     // tokens a b a b a b a c -> pairs (a,b)x3 (b,a)x3 (a,c)x1; 3 bigram
     // types. Marginals: c(a.)=4, N1+(a,.)=2; c(b.)=3, N1+(b,.)=1;
     // N1+(.,a)=N1+(.,b)=N1+(.,c)=1. With d=0.75 and min-count 3:
@@ -64,7 +64,7 @@ class Round13QueriesSpec extends SparkSpec {
 
   test("q_text_normalize: control strip, NFC compose, whitespace collapse, trim") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("norm").toString
+    val dir = tmpDir("norm")
     // doc_id 0 triggers every noise branch (0 mod 4/3/2 all zero):
     // raw = BEL + "hi" + " cafe"+U+0301 + TAB+"  trailing"+BS+"junk "
     // clean = "hi caf\u00e9 trailingjunk"
@@ -104,7 +104,7 @@ class Round13QueriesSpec extends SparkSpec {
 
   test("q_embed_pca: planted anisotropic corpus recovers the dominant axis") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pca").toString
+    val dir = tmpDir("pca")
     // axis 0 carries variance ~33 (t = 0..19), axis 1 carries ~2.5e-5,
     // the rest are constant zero -- the top component must be +/-e0, and the
     // sign convention (largest-|coord| positive) forces +e0.

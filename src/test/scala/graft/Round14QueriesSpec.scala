@@ -11,7 +11,7 @@ class Round14QueriesSpec extends SparkSpec {
 
   private def docsDir(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14").toString
+    val dir = tmpDir("r14")
     rows.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -19,7 +19,7 @@ class Round14QueriesSpec extends SparkSpec {
 
   test("q_events_cusum: burst day spikes by its excess volume; flat stream scores 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cusum").toString
+    val dir = tmpDir("cusum")
     def ts(day: Int, i: Int) = java.sql.Timestamp.valueOf(
       f"2024-01-0$day%d 00:00:${i % 60}%02d")
     // type a: daily counts 2,2,2,2,7 (n_days=5, tot=15)
@@ -74,7 +74,7 @@ class Round14QueriesSpec extends SparkSpec {
 
   test("q_graph_modularity: hand-traced two-community graph scores Q = 0.5 exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mod").toString
+    val dir = tmpDir("mod")
     // Orders o1/o2 both contain parts {1,2}; o3/o4 both contain {3,4}
     // -> co-purchase edges (w>=2): 1-2 and 3-4. Brands: {1,2}=A, {3,4}=B.
     // m=2; every degree=1; per community: e_c=1, d_c=2
@@ -98,7 +98,7 @@ class Round14QueriesSpec extends SparkSpec {
 
   test("q_embed_coherence: hand-traced orthogonal vs identical member pairs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("coh").toString
+    val dir = tmpDir("coh")
     // label 0: orthogonal members (1,0) and (0,1) -> centroid sum
     // (1000,1000): cos = 1e6/(√1e6·√2e6) = 0.7071068 -> 707107 ppm.
     // label 1: identical members (1,1),(1,1) -> cos = 1.0 -> 1000000 ppm.
@@ -150,7 +150,7 @@ class Round14QueriesSpec extends SparkSpec {
     // bucket = min(3, id//1)). Reference (ids %5<>0, 8 docs) has the SAME
     // distribution as each batch, so every ratio is exactly 1.0 in IEEE
     // arithmetic -> kl_micro exactly 0, n_buckets=2 (x, y), tot_tok=2.
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
+    val dir = tmpDir("drift")
     (0L to 9L).map(i => (i, "x y", "A")).toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q_stream_drift_gate")(spark, dir).collect()
@@ -165,7 +165,7 @@ class Round14QueriesSpec extends SparkSpec {
     // bucket; the streamed docs (ids 0 and 5) are entirely novel tokens.
     // The inner-join clamp must drop BOTH batches on both engines — a
     // degenerate all-null row here was the review catch this pins.
-    val dir = java.nio.file.Files.createTempDirectory("driftN").toString
+    val dir = tmpDir("driftN")
     (0L to 9L).map(i =>
         (i, if (i % 5 == 0) "zzz qqq" else "x y", "A"))
       .toDF("doc_id", "text", "source")
@@ -182,7 +182,7 @@ class Round14QueriesSpec extends SparkSpec {
     // oracle that replays the same rewrite.
     import spark.implicits._
     val rnd = new scala.util.Random(14)
-    val dir = java.nio.file.Files.createTempDirectory("cusumP").toString
+    val dir = tmpDir("cusumP")
     val counts: Map[(String, Int), Int] = (for {
       t <- Seq("a", "b", "c"); d <- 1 to 20
       c = rnd.nextInt(7) if c > 0

@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round15QueriesSpec extends SparkSpec {
 
-  private def tmp(pfx: String): String =
-    java.nio.file.Files.createTempDirectory(pfx).toString
-
   private def writeOrders(dir: String, prices: Seq[Double]): Unit = {
     import spark.implicits._
     prices.zipWithIndex
@@ -23,7 +20,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_agg_histogram: bucket edges, overflow clamp, exact cent sums") {
-    val dir = tmp("r15hist")
+    val dir = tmpDir("r15hist")
     // bucket 0: 100.00 + 49999.99; bucket 1: exactly-on-edge 50000.00;
     // bucket 2: 125000.00; clamp bucket 11 (open-ended): 700000.00
     writeOrders(dir, Seq(100.0, 49999.99, 50000.0, 125000.0, 700000.0))
@@ -39,7 +36,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_quality_benford: sub-1 rows excluded, exact integer shares + chi2") {
-    val dir = tmp("r15benford")
+    val dir = tmpDir("r15benford")
     // digits: 1 (from 1.00), 1 (19.99), 2 (250.00), 2 (2500.00),
     // 9 (900.12); 0.50 is excluded by the >= 1 guard
     writeOrders(dir, Seq(1.0, 19.99, 250.0, 2500.0, 900.12, 0.5))
@@ -88,7 +85,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_events_survival: life table with conversions, censoring, exact micro-nats") {
-    val dir = tmp("r15surv")
+    val dir = tmpDir("r15surv")
     // horizon = day01 + 6 = day07 (SurvivalObsDays = 7).
     // u1: first day01, purchase day01   -> event t=0
     // u2: first day01, purchase day03   -> event t=2
@@ -114,7 +111,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_events_survival: S(t)=0 terminal row (all remaining convert) emits NULL") {
-    val dir = tmp("r15surv0")
+    val dir = tmpDir("r15surv0")
     writeEvents(dir, Seq(
       (1L, "2024-01-01", "purchase"),
       (2L, "2024-01-01", "view"), (2L, "2024-01-04", "purchase"),
@@ -137,7 +134,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_text_heaps_law: cumulative vocabulary counts first occurrences only") {
-    val dir = tmp("r15heaps")
+    val dir = tmpDir("r15heaps")
     // first occurrences: a->doc0, b->doc0, c->doc1, d->doc2;
     // 4 docs, 20 buckets -> doc i lands in bucket i*5
     writeDocs(dir, Seq("a b a", "b c", "c d a", "d"))
@@ -149,7 +146,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_text_burstiness: VMR separates concentrated from spread terms exactly") {
-    val dir = tmp("r15burst")
+    val dir = tmpDir("r15burst")
     // over N=4 docs: x appears 4x in ONE doc (VMR = 16/4 - 4/4 = 3);
     // y 2x in each of two docs (8/4 - 1 = 1); z once in all four (0).
     // All tot=4 -> tie broken by term asc.
@@ -164,7 +161,7 @@ class Round15QueriesSpec extends SparkSpec {
 
   test("q_pii_kanonymity: risky classes under k=5, boundary class safe, negative band floors") {
     import spark.implicits._
-    val dir = tmp("r15kanon")
+    val dir = tmpDir("r15kanon")
     // nation 1: (A, band 0) x6 safe; (B, band 0) x2 risky;
     //           (A, band -1: acctbal -500 floors to -1) x1 risky
     // nation 2: one class of exactly 5 -> NOT risky (strict <)
@@ -190,7 +187,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_embed_knn_eval: majority vote flags the mislabeled vector, self excluded") {
-    val dir = tmp("r15knn")
+    val dir = tmpDir("r15knn")
     // two clean clusters of 4 + one A-cluster vector mislabeled 1.
     // Every probe's 5-NN: for cluster members -> 3 own + vM/1 cross ->
     // majority = own label (correct); for vM -> 4 A + 1 B -> pred 0,
@@ -213,7 +210,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_sample_coreset: farthest-point traversal, exact distances, vec_id ties") {
-    val dir = tmp("r15coreset")
+    val dir = tmpDir("r15coreset")
     // 1-D layout on the first axis (second axis 0): ids 0..4 at
     // positions 0, 1, 10, 100, 101 (milli-quantized: x1000).
     // seed = id 0 (smallest id). Farthest from {0} = id 4 (at 101).
@@ -237,7 +234,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_timeseries_interpolate: interior gaps fill linearly, exact integer division") {
-    val dir = tmp("r15interp")
+    val dir = tmpDir("r15interp")
     // one user, observations at hours 0 and 3: 100.00 and 400.00 ->
     // gap hours 1,2 interpolate to 200.00, 300.00. Second gap with
     // truncating division: hours 3..5, 400.00 -> 399.99 at h5:
@@ -264,7 +261,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_events_seasonality: chi2 counts absent cells without materializing them") {
-    val dir = tmp("r15season")
+    val dir = tmpDir("r15season")
     // type a: 4 events all in ONE cell (2024-01-01 is a Monday, dow=2,
     // hour 5). t=4, n_cells=1. Observed cell: (168·4−4)²/(168·4) =
     // 668²/672 = 664.0238095... -> 664023810 micro (floor(...*1e6+.5));
@@ -282,7 +279,7 @@ class Round15QueriesSpec extends SparkSpec {
 
   test("q_agg_mode: deterministic tiebreak on equal counts") {
     import spark.implicits._
-    val dir = tmp("r15mode")
+    val dir = tmpDir("r15mode")
     // status F: LOW x3, HIGH x3 (tie -> HIGH < LOW lexically), MED x1
     val rows = Seq.fill(3)(("F", "LOW")) ++ Seq.fill(3)(("F", "HIGH")) ++
       Seq(("F", "MED")) ++ Seq.fill(2)(("O", "MED"))
@@ -299,7 +296,7 @@ class Round15QueriesSpec extends SparkSpec {
 
   test("q_quality_referential: orphans counted, parent coverage exact") {
     import spark.implicits._
-    val dir = tmp("r15ref")
+    val dir = tmpDir("r15ref")
     // customers 1..4; orders reference 1,1,2,9(orphan),8(orphan);
     // lineitems reference orders 10,10,11,99(orphan)
     (1 to 4).map(i => (i.toLong, "x")).toDF("c_custkey", "c_name")
@@ -323,7 +320,7 @@ class Round15QueriesSpec extends SparkSpec {
 
   test("q_window_pareto: the exactly-80% boundary excludes the next row") {
     import spark.implicits._
-    val dir = tmp("r15pareto")
+    val dir = tmpDir("r15pareto")
     // nation 1: revenues 50, 30, 15, 5 (cents x100) -> cum-before
     // 0/50/80/95 of tot=100: rows with cum_before*5 < 400 are the first
     // TWO (0, 50) — the 80-cum row starts AT the line and is excluded.
@@ -344,7 +341,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_text_rake: phrase segmentation at stopwords, exact degree/freq scores") {
-    val dir = tmp("r15rake")
+    val dir = tmpDir("r15rake")
     // doc0: phrases "deep learning model" + "deep learning"
     //   freq: deep 2, learning 2, model 1
     //   degree: deep 3+2=5, learning 5, model 3
@@ -371,7 +368,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_sim_mmr: diversity flips the relevance-order tie; exact integer chain") {
-    val dir = tmp("r15mmr")
+    val dir = tmpDir("r15mmr")
     // Query = vec 0 = (1, 0). All vectors have EXACT norm 1000 after
     // milli-quantization, so every cosine is integer-exact (dot/1e6):
     //   id1 (0.96, 0.28): rel 960000 — picked first.
@@ -408,7 +405,7 @@ class Round15QueriesSpec extends SparkSpec {
   }
 
   test("q_embed_knn_eval: vote tie resolves to the smaller label") {
-    val dir = tmp("r15knntie")
+    val dir = tmpDir("r15knntie")
     // probe 0 has exactly 4 neighbors (k=5 heap under-full): two label 2,
     // two label 7, symmetric geometry -> 2-2 tie -> pred = 2
     writeEmb(dir, Seq(

@@ -8,9 +8,6 @@ package graft
   */
 class Round16QueriesSpec extends SparkSpec {
 
-  private def tmp(pfx: String): String =
-    java.nio.file.Files.createTempDirectory(pfx).toString
-
   test("Mmr.diversifiedTopK fails fast on an all-zero query vector") {
     import spark.implicits._
     val emb = Seq(
@@ -53,7 +50,7 @@ class Round16QueriesSpec extends SparkSpec {
       if (i >= 75) mkDay(i, gib((i / 5).toInt))
       else mkDay(i, walk(i.toInt % 31, 5))
     }
-    val dir1 = tmp("r16v3a"); val dir2 = tmp("r16v3b")
+    val dir1 = tmpDir("r16v3a"); val dir2 = tmpDir("r16v3b")
     (corpus ++ day).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir1/documents.parquet")
     // dir2: the SAME corpus slice, the day WITHOUT the drifted batch
@@ -98,7 +95,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_timeseries_m4: bucket edges, equal-timestamp tie broken by event_id") {
-    val dir = tmp("r16m4")
+    val dir = tmpDir("r16m4")
     // span: t0 = 00:00:00, max = 00:02:07 (+127 s) -> t1 - t0 = 127e6+1 us.
     // bucket(rel_us) = rel_us*128 div (127e6+1): 0s->0, 63s->63, 127s->127.
     writeEventsV(dir, Seq(
@@ -119,7 +116,7 @@ class Round16QueriesSpec extends SparkSpec {
 
   test("q_quality_cramers_v: perfect association 1e6, independence 0, dof-0 NULL") {
     import spark.implicits._
-    val dir = tmp("r16cram")
+    val dir = tmpDir("r16cram")
     // lineitem: ONE returnflag (r=1 -> dof 0 -> v NULL, chi2 exactly 0)
     Seq(("N", "O"), ("N", "O"), ("N", "F"))
       .toDF("l_returnflag", "l_linestatus")
@@ -146,7 +143,7 @@ class Round16QueriesSpec extends SparkSpec {
 
   test("q_text_collocations: min-pair floor, exact 9-term G2 wiring") {
     import spark.implicits._
-    val dir = tmp("r16colloc")
+    val dir = tmpDir("r16colloc")
     // "x y" x5 alternation: (x,y) 5 pairs (passes floor), (y,x) 4 (pruned)
     Seq((0L, ("x y " * 5).trim, "en", "src0", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -196,7 +193,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_text_readability: punctuated sentences and syllable groups count exactly") {
-    val dir = tmp("r16read")
+    val dir = tmpDir("r16read")
     // one doc, one (lang, source) cell: words [the,cat,sat,a,big,dog,
     // ran] = 7, sentences 2, vowel groups e,a,a,a,i,o,a = 7
     writeDocs(dir, Seq((0L, "the cat sat. a big dog ran!")))
@@ -212,7 +209,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_quality_gopher: the symbol-ratio rule fires on symbol-bearing docs only") {
-    val dir = tmp("r16goph")
+    val dir = tmpDir("r16goph")
     val clean = (1 to 30).map(i => s"w$i the the").mkString(" ") // 90 words
     val symbolic = clean + " ### $$$ %%% ####"        // 13 symbols: 130 > 90
     writeDocs(dir, Seq((0L, clean), (1L, symbolic)))
@@ -224,7 +221,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_agg_corr_matrix: exact ±1 on (anti)correlated columns, NULL on constant") {
-    val dir = tmp("r16corr")
+    val dir = tmpDir("r16corr")
     import spark.implicits._
     // qty = i, price = 2i (r=+1), disc = 10-i (r=-1 vs qty), tax = const
     (1 to 8).map(i => (1L, 1L, 1L, i, i.toDouble, 2.0 * i,
@@ -243,7 +240,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_timeseries_acf: alternating daily series scores the hand-computed lags") {
-    val dir = tmp("r16acf")
+    val dir = tmpDir("r16acf")
     import spark.implicits._
     // 6 days, counts 10,20,10,20,10,20 for one type: n=6 Sx=90 Sxx=1500
     // lag1: m=5 sxy=1000 sh=70 st=80 -> r = -4500/5400 -> -833333
@@ -265,7 +262,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_pii_ldiversity: homogeneous class flagged risky, diverse class passes") {
-    val dir = tmp("r16ldiv")
+    val dir = tmpDir("r16ldiv")
     import spark.implicits._
     // nation 1: one (segment) class whose 4 orders all share ONE priority
     // -> l=1 < 3, risky; nation 2: one class with 3 distinct priorities
@@ -284,7 +281,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_stats_welch_ttest: equal means -> t=0; hand-computed Welch dof") {
-    val dir = tmp("r16welch")
+    val dir = tmpDir("r16welch")
     import spark.implicits._
     // treated (disc .10): cents 100,200,300 (m=200); control (disc 0):
     // cents 100,100,300,300 (m=200) -> diff=0, t=0; a1=a2=10000/3 so
@@ -310,7 +307,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_text_textrank: hub word outranks leaves; symmetric pair ties split by word") {
-    val dir = tmp("r16trank")
+    val dir = tmpDir("r16trank")
     // star graph: h co-occurs with a/b/c -> h gets the centrality mass;
     // the leaves tie exactly (integer pagerank is deterministic) and
     // order alphabetically
@@ -337,7 +334,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_agg_skyline: dominated points drop; per-qty maxima pre-collapse") {
-    val dir = tmp("r16sky")
+    val dir = tmpDir("r16sky")
     // qty->max cents: 5->100, 4->200, 3->150, 2->250
     // skyline (qty desc): (5,100) in, (4,200) in, (3,150) dominated by
     // (4,200), (2,250) in
@@ -349,7 +346,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_quality_drift_psi: identical weeks tie at the smoothing floor; a shifted week scores higher") {
-    val dir = tmp("r16psi")
+    val dir = tmpDir("r16psi")
     import spark.implicits._
     // weeks 1,2: same distribution (3 low + 1 high); week 3: all high
     def o(day: String, price: Double, i: Int) =
@@ -371,7 +368,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_events_paths: hand-traced trigram counts and ppm shares") {
-    val dir = tmp("r16path")
+    val dir = tmpDir("r16path")
     import spark.implicits._
     // one user: a b c a b c -> trigrams abc(2), bca(1), cab(1); total 4
     val rows = Seq("a", "b", "c", "a", "b", "c").zipWithIndex.map {
@@ -388,7 +385,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_embed_sq8: well-separated directions survive 8-bit quantization at full recall; zero vectors drop") {
-    val dir = tmp("r16sq8")
+    val dir = tmpDir("r16sq8")
     import spark.implicits._
     // 5 clean axis/diagonal directions + one zero vector (excluded: its
     // milli norm is 0). Panel = whole corpus (KnnProbeN > 5); int8 codes
@@ -413,7 +410,7 @@ class Round16QueriesSpec extends SparkSpec {
   }
 
   test("q_window_wow_growth: negative growth TRUNCATES toward zero on both engines") {
-    val dir = tmp("r16wow")
+    val dir = tmpDir("r16wow")
     import spark.implicits._
     // one priority, 3 week-dense weeks: 300 -> 100 -> 200 cents
     // growth w2 = -200e6 div 300 = -666666 (floor would be -666667!)

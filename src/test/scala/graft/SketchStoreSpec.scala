@@ -13,9 +13,6 @@ class SketchStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf001 = "/root/testdata/sf0.001"
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("bloom: save/load round-trips bytes exactly; probes identical") {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
       .select(col("doc_id"), col("text")).limit(60).cache()
@@ -23,7 +20,7 @@ class SketchStoreSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") % 3 === 0)
     val fitted = BloomDedup.fitSketch(corpus, "doc_id", "text",
       window = 8, estItems = 1L << 12, numBits = 1L << 15)
-    val dir = tmp("bloomstore")
+    val dir = tmpDir("bloomstore")
     SketchStore.saveBloom(spark, dir, fitted, window = 8,
       estItems = 1L << 12, numBits = 1L << 15)
     val loaded = SketchStore.loadBloom(spark, dir, window = 8,
@@ -41,7 +38,7 @@ class SketchStoreSpec extends SparkSpec {
   }
 
   test("bloom: mismatched params and corrupt bytes are refused") {
-    val dir = tmp("bloomguard")
+    val dir = tmpDir("bloomguard")
     val bytes = Array.tabulate[Byte](64)(_.toByte)
     SketchStore.saveBloom(spark, dir, bytes, window = 16,
       estItems = 1L << 12, numBits = 1L << 15)
@@ -69,7 +66,7 @@ class SketchStoreSpec extends SparkSpec {
   test("ivf: loadIvf probes bit-identically to the fitting session") {
     val e = spark.read.parquet(s"$sf001/embeddings.parquet").cache()
     val queries = e.limit(5)
-    val dir = tmp("ivfstore")
+    val dir = tmpDir("ivfstore")
     val fitted = Similarity.fitIvf(e, nLists = 4, dir)
     val reopened = Similarity.loadIvf(spark, dir)
     assert(fitted.centroids.map(_.toSeq).toSeq ==
@@ -83,7 +80,7 @@ class SketchStoreSpec extends SparkSpec {
   test("ivfpq: loadIvfPq probes bit-identically; codebook bit-exact") {
     val e = spark.read.parquet(s"$sf001/embeddings.parquet").cache()
     val queries = e.limit(5)
-    val dir = tmp("ivfpqstore")
+    val dir = tmpDir("ivfpqstore")
     val (ix, cb) = Similarity.fitIvfPq(e, nLists = 4, m = 8, ks = 16,
       dim = 64, dir)
     val (ix2, cb2) = Similarity.loadIvfPq(spark, dir)
@@ -98,7 +95,7 @@ class SketchStoreSpec extends SparkSpec {
 
   test("compact keeps _ivf_centroids through the swap") {
     val e = spark.read.parquet(s"$sf001/embeddings.parquet").cache()
-    val root = tmp("ivfcompact")
+    val root = tmpDir("ivfcompact")
     // a flat (unpartitioned) artifact dir exercises the generic path:
     // write the lists unpartitioned so Maintenance.compact accepts it
     Similarity.fitIvf(e, nLists = 4, s"$root/part")

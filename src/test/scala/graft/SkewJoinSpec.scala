@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *     metrics rather than trusted from documentation.
   *  2. Manual salting produces identical results to the unsalted join —
   *     the correctness half of the `q_join_skew_salted` demo (its
-  *     measured half lives in SkewProbe / SCALE.md on the zipf corpus).
+  *     measured half lives in SCALE.md on the zipf corpus).
   *
   * Thresholds are lowered because test data is KBs, not the 256 MB
   * production default; the PLAN SHAPE under "partition >> threshold" is

@@ -73,8 +73,7 @@ class StreamingSemanticsSpec extends SparkSpec {
   test("foreachBatch sink writes idempotent batch_id partitions") {
     implicit val ctx = spark.sqlContext
     import graft.streaming.StreamOps
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "febatch").toString + "/out"
+    val dir = tmpDir("febatch") + "/out"
     val in = MemoryStream[(Long, Double)]
     in.addData((1L, 10.0), (2L, 20.0))
     val out = StreamOps.runForeachBatchSink(spark, in.toDF().toDF("k", "v"), dir)
@@ -92,8 +91,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     import graft.streaming.StreamOps
     // the batch fires but writes zero rows -> no part files in the sink;
     // schema inference would throw, the explicit read schema must not
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "febatch_empty").toString + "/out"
+    val dir = tmpDir("febatch_empty") + "/out"
     val in = MemoryStream[(Long, Double)]
     in.addData((1L, 10.0))
     val out = StreamOps.runForeachBatchSink(spark,
@@ -110,8 +108,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     // output — the full recovery path behind q_stream_foreach_batch's
     // exactly-once claim, here actually exercised with an injected crash.
     import org.apache.spark.sql.types._
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "crashsrc").toFile
+    val base = new java.io.File(tmpDir("crashsrc"))
     val src = new java.io.File(base, "in"); src.mkdirs()
     val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
     val out = new java.io.File(base, "out").getAbsolutePath
@@ -239,8 +236,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       val viaRocks = collect("rp_rocks", Some(StreamOps.RocksDbProviderConf._2))
       assert(viaDefault.nonEmpty && viaRocks == viaDefault)
       assertRestored("runToTable")
-      val sink = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), "rp_sink").toString + "/out"
+      val sink = tmpDir("rp_sink") + "/out"
       StreamOps.runForeachBatchSink(spark,
         StreamOps.eventsStream(spark, sfDir).select("event_id"), sink)
       assertRestored("runForeachBatchSink")
@@ -328,8 +324,7 @@ class StreamingSemanticsSpec extends SparkSpec {
   test("chunked staging runs K real micro-batches, chronologically, exactly-once") {
     import graft.streaming.StreamOps
     val sfDir = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "chunked").toString + "/out"
+    val dir = tmpDir("chunked") + "/out"
     // default staging: 4 chronological chunk files + maxFilesPerTrigger=1;
     // the foreachBatch sink tags rows with their batch id, making the
     // incremental execution directly observable
@@ -418,8 +413,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     import graft.streaming.StreamOps
     // `<dir>/<table>.parquet` as one parquet file, as the test tables ship
     def source(table: String, df: org.apache.spark.sql.DataFrame): String = {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), "degenerate").toString
+      val dir = tmpDir("degenerate")
       df.coalesce(1).write.parquet(s"$dir/${table}_src")
       val part = new java.io.File(s"$dir/${table}_src").listFiles()
         .filter(_.getName.endsWith(".parquet")).head

@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.ZOrder
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Z-order clustering must make per-file min/max bounds tight on BOTH
   * clustering columns — measured directly from the written layout, by
@@ -16,8 +15,7 @@ class ZOrderSpec extends SparkSpec {
     val pts = spark.range(256L * 256)
       .select((col("id") % 256).as("x"), (col("id") / 256).as("y"))
       .repartition(8) // arrival order carries no spatial locality
-    val base = Files.createTempDirectory("graft_zorder").toFile
-    base.deleteOnExit()
+    val base = new java.io.File(tmpDir("graft_zorder"))
     val zDir = new java.io.File(base, "z").getAbsolutePath
     val linDir = new java.io.File(base, "linear").getAbsolutePath
     ZOrder.writeZOrdered(pts, zDir, col("x"), col("y"), bits = 8, nFiles = 16)

@@ -1,10 +1,10 @@
 #!/usr/bin/env bash
-# Run a graft main class outside sbt (so long-running benches/probes don't
-# hold the sbt build lock). Mirrors build.sbt's forked-JVM setup: the
+# Run a graft main class outside sbt (so long-running benches don't hold
+# the sbt build lock). Mirrors build.sbt's forked-JVM setup: the
 # Spark-on-JDK17 --add-opens list (without java.base/java.nio open, Kryo
 # cannot serialize HeapByteBuffer and every RDD/ML query dies) and the
-# SPARK_DRIVER_MEM heap knob. Test-scope mains (SkewProbe, IvfPqProbe)
-# need target/scala-2.13/test-classes on the path; harmless otherwise.
+# SPARK_DRIVER_MEM heap knob. Every main lives in src/main; the
+# test-scope probe mains (SkewProbe, IvfPqProbe, ...) were deleted.
 #   tools/run_main.sh graft.Bench
 #   SPARK_DRIVER_MEM=64g tools/run_main.sh graft.ScaleUpMain src dst 100
 set -euo pipefail

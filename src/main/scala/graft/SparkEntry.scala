@@ -12,9 +12,9 @@ import graft.queries._
   */
 object SparkEntry {
 
-  // def, not val: LlmOps.oracles GENERATES q_dedup_semantic's SQL from
-  // centroids recorded at query run time — a val would freeze the map
-  // before any query ran and permanently drop that entry.
+  // def, not val: the generated oracles read fits and recordings that
+  // queries leave at run time, through Artifacts.single — a val would
+  // freeze the map before any query ran and permanently drop them.
   private[graft] def modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(
       (Flagship.defs, Flagship.oracles),

@@ -32,6 +32,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prefixed, so parquet data discovery ignores them inside a data
   * directory, and [[compact]] carries them through a layout rewrite.
   *
+  * Oracle emission reads a recording back with [[single]]: a generated
+  * oracle replays the value some query recorded on a corpus, and the
+  * dump it checks names no corpus. So a recording is emitted only when
+  * exactly one corpus holds a still-valid slot for it. When the query
+  * never ran (a subset run) there is nothing to replay; when two corpora
+  * recorded in one JVM the right one for the dump is ambiguous; when the
+  * corpus was rewritten since, the recording describes content that is
+  * gone. In each case the generated oracle is omitted and the compare
+  * falls back to rows-only, never to a wrong-corpus or stale replay.
+  *
   * Locations: artifacts live under one per-JVM directory that
   * [[TempDirs]] deletes at exit; nothing reads them after the session.
   * Replay recordings ([[replayOnce]]) are the exception: the oracle
@@ -165,7 +175,8 @@ object Artifacts {
     var value: Any = null
   }
 
-  private val slots = new java.util.concurrent.ConcurrentHashMap[String, Slot]()
+  /** Slots keyed by (corpus dir, artifact name). */
+  private val slots = new java.util.concurrent.ConcurrentHashMap[(String, String), Slot]()
 
   /** One listing of `dir`: (relative path, length, mtime) of every file,
     * sorted. Only length and mtime are read: the local file system loads
@@ -185,11 +196,29 @@ object Artifacts {
     * value while the fingerprint is unchanged and refits when it is not.
     * A failed fit stores nothing. */
   def once[T](dir: String, name: String)(fit: => T): T = {
-    val slot = slots.computeIfAbsent(s"$dir#$name", _ => new Slot)
+    val slot = slots.computeIfAbsent((dir, name), _ => new Slot)
     val stamp = fingerprint(dir)
     slot.synchronized {
       if (slot.stamp != stamp) { slot.value = fit; slot.stamp = stamp }
       slot.value.asInstanceOf[T]
+    }
+  }
+
+  /** The value of artifact `name` when exactly one corpus holds a slot
+    * for it that is still valid for that corpus's current content (the
+    * emission rule above); `None` for no corpus, for two or more, or for
+    * a corpus rewritten or deleted since it recorded. */
+  def single[T](name: String): Option[T] = {
+    import scala.jdk.CollectionConverters._
+    slots.asScala.toSeq.collect { case ((dir, `name`), slot) =>
+      slot.synchronized {
+        val now = scala.util.Try(fingerprint(dir)).toOption
+        if (slot.stamp != null && now.contains(slot.stamp)) Some(slot.value)
+        else None
+      }
+    }.flatten match {
+      case Seq(v) => Some(v.asInstanceOf[T])
+      case _ => None
     }
   }
 

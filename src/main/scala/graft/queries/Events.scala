@@ -235,7 +235,7 @@ object Events {
         .agg(count(lit(1)).as("n_tiles"),
           hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_users"))
         .orderBy("event_type")
-      sketchTilesRec.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "sketch_tiles_rec")(
         df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
       df
     }),
@@ -833,20 +833,13 @@ object Events {
     * — interpolated into the DuckDB oracle. */
   private[graft] val SurvivalObsDays = 7
 
-  /** Recorded q_agg_sketch_tiles rows (type, n_tiles, est_users), keyed
-    * by corpus dir — its verify-replay oracle's literal side (one row
-    * per event type; schema-bounded). One-dir emission rule like the
-    * LlmOps memos: zero or conflicting recordings fall back to
-    * rows-only. */
-  private val sketchTilesRec =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
-
-  private def sketchTilesOracleSql: Option[String] = {
-    import scala.jdk.CollectionConverters._
-    val rec = sketchTilesRec.asScala.values.toSeq
-    if (rec.size != 1 || rec.head.isEmpty) None
-    else {
-      val vals = rec.head.map { case (t, nt, eu) =>
+  /** q_agg_sketch_tiles' verify-replay oracle over its recorded rows
+    * (artifact `sketch_tiles_rec`: (type, n_tiles, est_users), one row
+    * per event type; schema-bounded) as literals. */
+  private def sketchTilesOracleSql: Option[String] =
+    graft.io.Artifacts.single[Seq[(String, Long, Long)]]("sketch_tiles_rec")
+      .filter(_.nonEmpty).map { rec =>
+      val vals = rec.map { case (t, nt, eu) =>
         s"('$t', CAST($nt AS BIGINT), CAST($eu AS BIGINT))"
       }.mkString(", ")
       // Exact counts drive the join: a type the recording missed emits
@@ -854,7 +847,7 @@ object Events {
       // out-of-bound estimate nulls out, and a recorded type the corpus
       // lacks leaves the oracle short a row — every failure direction
       // flags.
-      Some(s"""WITH rec(event_type, n_tiles, est_users) AS (VALUES $vals),
+      s"""WITH rec(event_type, n_tiles, est_users) AS (VALUES $vals),
          exact AS (SELECT event_type,
                      count(DISTINCT date_trunc('day', ts)) AS nt,
                      count(DISTINCT user_id) AS nu
@@ -864,12 +857,11 @@ object Events {
                 CASE WHEN abs(r.est_users - e.nu) <= greatest(1, 0.05 * e.nu)
                      THEN r.est_users END AS est_users
          FROM exact e LEFT JOIN rec r USING (event_type)
-         ORDER BY e.event_type""")
+         ORDER BY e.event_type"""
     }
-  }
 
   // def, not val: the sketch-tiles oracle replays estimates RECORDED at
-  // query run time — a val would freeze the map before any query ran.
+  // query run time — a val would freeze the oracles before any query ran.
   def oracles: Map[String, String] = staticOracles ++
     sketchTilesOracleSql.map("q_agg_sketch_tiles" -> _)
 

@@ -101,67 +101,9 @@ object LlmOps {
   private[queries] val DayBlockedDomains: Seq[String] = Seq(
     "src15.example.com", "phish.example.net")
 
-  /** Per-corpus IVF index memo (JVM lifetime — verify/bench are one JVM
-    * per pass). Keyed by the scale-factor dir: a different corpus gets its
-    * own fit; the same corpus never refits. */
-  private val ivfIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
-  private[queries] def ivfIndexFor(dir: String,
-      fit: () => Similarity.IvfIndex): Similarity.IvfIndex =
-    ivfIndexes.computeIfAbsent(dir, _ => fit())
-
-  /** Per-corpus IVF-PQ memo (its OWN IVF index dir — fitted alongside the
-    * PQ codebooks, not shared with `q_sim_ivf_ann`'s, so the two queries'
-    * index lifecycles stay independent). */
-  private val ivfPqIndexes = new java.util.concurrent.ConcurrentHashMap[
-    String, (Similarity.IvfIndex, graft.ops.ProductQuantizer.PqCodebook)]()
-
-  private[queries] def ivfPqIndexFor(dir: String,
-      fit: () => (Similarity.IvfIndex, graft.ops.ProductQuantizer.PqCodebook))
-      : (Similarity.IvfIndex, graft.ops.ProductQuantizer.PqCodebook) =
-    ivfPqIndexes.computeIfAbsent(dir, _ => fit())
-
   /** q_dedup_semantic's cosine threshold — ONE definition shared by the
     * query and its generated oracle (edited together by construction). */
   private val SemanticThreshold = 0.35
-
-  /** The blocking centroids q_dedup_semantic fitted, KEYED BY CORPUS DIR
-    * — consumed by [[oracles]] to GENERATE its DuckDB oracle. graft.Verify
-    * runs every query BEFORE dumping oracle_sql.json, so by dump time this
-    * holds the centroids the dumped result was computed with (the fit is
-    * seeded and deterministic, so re-runs write identical values). The
-    * oracle entry is emitted only when exactly ONE corpus has been fitted
-    * this JVM: when the query never ran (a SPARK_GRAFT_ONLY subset without
-    * it) there is nothing to emit, and when MORE than one dir ran (a
-    * multi-corpus session) the right corpus for the dump is ambiguous —
-    * both cases fall back to the driver's rows-only check rather than risk
-    * a wrong-corpus (silently stale) oracle. */
-  private val semanticCentroids =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Array[Double]]]()
-
-  /** Same lifecycle for `q_embed_kmeans`'s own fit (k differs from the
-    * semantic-dedup blocking fit, so the two memos stay independent). */
-  private val kmeansCentroids =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Array[Double]]]()
-
-  /** Per-corpus PQ codebook memo (`q_embed_pq`'s fit — deterministic and
-    * sample-bounded, so memoizing only saves the refit) — consumed by
-    * [[oracles]] to GENERATE the codebook-replay oracle. Same one-dir
-    * emission rule as the other fitted-artifact memos. */
-  private val pqCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.ProductQuantizer.PqCodebook]()
-
-  /** Per-corpus PCA fit memo (`q_embed_pca`'s one-pass moment fit) —
-    * consumed by [[oracles]] to GENERATE the projection-replay oracle.
-    * Same one-dir emission rule as the other fitted-artifact memos. */
-  private val pcaFits = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.Pca.PcaModel]()
-
-  /** Per-corpus top-k PCA fit memo (`q_embed_pca_k`'s orthogonal-
-    * iteration basis) — same lifecycle as [[pcaFits]]. */
-  private val pcaKFits = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.Pca.PcaKModel]()
 
   /** q_embed_pca_k's component count — ONE definition shared by the
     * query and its generated oracle. */
@@ -181,53 +123,24 @@ object LlmOps {
       s.sparkContext.broadcast(bytes)
     }
 
-  /** Recorded LSH CANDIDATE pairs (pre-verification), keyed by corpus dir
-    * — consumed by [[oracles]] to GENERATE verify-replay DuckDB oracles
-    * for the three MinHash-based dedup queries (the q_dedup_semantic
-    * pattern: the murmur-based candidate generation is the only
-    * non-SQL-expressible piece, so it enters the oracle as recorded
-    * literals while DuckDB independently recomputes shingling, exact
-    * Jaccard, threshold, rounding, and ordering from the raw documents
-    * table). Same one-dir emission rule as [[semanticCentroids]].
-    * `Right(pairs)` = inline literals (≤ [[ReplayOracleCap]] pairs,
-    * self-contained SQL); `Left(path)` = the over-cap parquet spillover
-    * ([[graft.io.Artifacts.replayOnce]], written by executors — the recording
-    * collect is limit-bounded either way) the generated oracle reads
-    * back, so the replay stays exact at any corpus size and the old
-    * rows-only fallback is gone. Candidate DETERMINISM (seeded
-    * signatures) is pinned separately by IncrementalDedupSpec /
-    * RecallFloorSpec. */
-  private type CandMemo =
-    java.util.concurrent.ConcurrentHashMap[String, Seq[(Option[String], Long, Long)]]
+  /** Recorded LSH CANDIDATE pairs (pre-verification) — the artifacts
+    * `lsh_cands`, `inc_cands` and `full_cands` (the curate chains record
+    * theirs as plain literal pairs) — read back by [[oracles]] to
+    * GENERATE verify-replay DuckDB oracles
+    * (the q_dedup_semantic pattern: the murmur-based candidate
+    * generation is the only non-SQL-expressible piece, so it enters the
+    * oracle as recorded literals while DuckDB independently recomputes
+    * shingling, exact Jaccard, threshold, rounding, and ordering from
+    * the raw documents table). `Right(pairs)` = inline literals
+    * (≤ [[ReplayOracleCap]] pairs, self-contained SQL); `Left(path)` =
+    * the over-cap parquet spillover ([[graft.io.Artifacts.replayOnce]],
+    * written by executors — the recording collect is limit-bounded
+    * either way) the generated oracle reads back, so the replay stays
+    * exact at any corpus size. q_dedup_simhash records its per-doc
+    * signatures the same way. Candidate DETERMINISM (seeded signatures)
+    * is pinned separately by IncrementalDedupSpec / RecallFloorSpec. */
   private type CandRec = Either[String, Seq[(Option[String], Long, Long)]]
-  private type CandMemoE =
-    java.util.concurrent.ConcurrentHashMap[String, CandRec]
-  private val lshCandidates = new CandMemoE()
-  private val incCandidates = new CandMemoE()
-  private val fullCandidates = new CandMemoE()
-  /** The v2 curation pipeline's within-day MinHash candidates — its own
-    * memo (the day slice differs from q_dedup_minhash_lsh's corpus-wide
-    * candidate set), consumed by [[oracles]] to splice the literal
-    * candidate stage into the one-CTE-chain pipeline replay. */
-  private val pipelineCands = new CandMemo()
-  /** v3's within-day candidates — admission differs (the quarantined
-    * batch's docs never reach the near-dup stage), so v3 records its own
-    * candidate set for its spliced replay oracle. */
-  private val pipelineV3Cands = new CandMemo()
   private val ReplayOracleCap = 5000
-
-  /** Recorded per-doc SimHash SIGNATURES, keyed by corpus dir — consumed
-    * by [[oracles]] to GENERATE q_dedup_simhash's verify-replay oracle
-    * (the signatures are xxhash64-based and not SQL-expressible, so they
-    * enter as recorded artifacts while DuckDB recomputes the entire
-    * pairing stage — brute-force all-pairs below the literal cap, an
-    * independently-partitioned banded join above it). Same one-dir
-    * emission rule as [[lshCandidates]]. `Right(sigs)` = inline literals
-    * (≤ [[ReplayOracleCap]] docs, self-contained SQL); `Left(path)` =
-    * the over-cap parquet spillover ([[graft.io.Artifacts.replayOnce]]) the
-    * generated oracle reads back — zero rows-only at any corpus size. */
-  private val simhashSigs = new java.util.concurrent.ConcurrentHashMap[
-    String, Either[String, Seq[(Long, Long)]]]()
 
   /** q_dedup_simhash's hamming budget — ONE definition shared by the
     * query, its generated oracle, and the brute-force spec twin. 3 is
@@ -258,13 +171,6 @@ object LlmOps {
     * cost; ks=256 buys only +0.04 more for ~10× the fit — SCALE.md
     * records the surface). */
   private val IvfPqKs = 64
-  /** Density-scaled ADC shortlist per corpus ([[Similarity.adcRerank]]'s
-    * fraction-of-candidates law — a FIXED shortlist collapses as density
-    * grows; RecallLadderSpec pins the contrast), memoized at first fit
-    * so the generated oracle replays the same value. At the driver
-    * corpus this resolves to the old fixed 32 (the floor). */
-  private val ivfPqReranks =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private val AnnQueryPred = "vec_id < 50"
   private val IvfPqQueryPred = "vec_id % 50 = 0"
 
@@ -300,19 +206,15 @@ object LlmOps {
     }
   }
 
-  private def replayOracle(memo: CandMemoE, left: String, right: String,
-                           staged: Boolean = false): Option[String] = {
-    import scala.jdk.CollectionConverters._
-    memo.asScala.values.toSeq match {
-      case Seq(Right(pairs)) =>
-        Some(graft.ops.Dedup.verifyReplayOracleSql(pairs, left, right,
-          VerifyThreshold))
-      case Seq(Left(path)) =>
-        Some(graft.ops.Dedup.verifyReplayOracleSqlFrom(path, staged, left,
-          right, VerifyThreshold))
-      case _ => None
+  private def replayOracle(name: String, left: String, right: String,
+                           staged: Boolean = false, extraCtes: String = "",
+                           prefixCol: Option[(String, String)] = None): Option[String] =
+    graft.io.Artifacts.single[CandRec](name).map {
+      case Right(pairs) => graft.ops.Dedup.verifyReplayOracleSql(pairs, left,
+        right, VerifyThreshold, extraCtes, prefixCol)
+      case Left(path) => graft.ops.Dedup.verifyReplayOracleSqlFrom(path,
+        staged, left, right, VerifyThreshold, extraCtes, prefixCol)
     }
-  }
 
   /** The incremental-dedup corpus index (base slice = doc_id % 5 >= 1,
     * batch slice = % 5 == 0), built once per corpus content — ONE
@@ -330,14 +232,14 @@ object LlmOps {
     }
 
   /** Record-or-reuse the incremental probe's candidate pairs for `dir` —
-    * the shared memo behind both the batch and streaming ingest oracles
-    * (the candidate set is identical: new-vs-corpus pairs are
+    * the shared `inc_cands` recording behind both the batch and streaming
+    * ingest oracles (the candidate set is identical: new-vs-corpus pairs are
     * per-document independent, so the per-chunk union equals the batch
     * probe). The frame's first two columns are (id_new, id_corpus);
     * literal-or-sidecar recording as in [[recordPairs]]. */
   private[queries] def incrementalCandidatesFor(dir: String,
       compute: () => org.apache.spark.sql.DataFrame): Unit =
-    incCandidates.computeIfAbsent(dir, _ =>
+    graft.io.Artifacts.once(dir, "inc_cands")(
       recordPairs(dir, "inc_cands", Seq((None, compute()))))
 
   /** The generated verify-replay oracle over the recorded incremental
@@ -345,18 +247,9 @@ object LlmOps {
     * streaming ingest query's batch attribution). Same one-dir emission
     * rule as [[replayOracle]], literal-or-sidecar. */
   private[queries] def incrementalReplayOracleSql(extraCtes: String = "",
-      prefixCol: Option[(String, String)] = None): Option[String] = {
-    import scala.jdk.CollectionConverters._
-    incCandidates.asScala.values.toSeq match {
-      case Seq(Right(rec)) =>
-        Some(graft.ops.Dedup.verifyReplayOracleSql(rec,
-          "id_new", "id_corpus", VerifyThreshold, extraCtes, prefixCol))
-      case Seq(Left(path)) =>
-        Some(graft.ops.Dedup.verifyReplayOracleSqlFrom(path, staged = false,
-          "id_new", "id_corpus", VerifyThreshold, extraCtes, prefixCol))
-      case _ => None
-    }
-  }
+      prefixCol: Option[(String, String)] = None): Option[String] =
+    replayOracle("inc_cands", "id_new", "id_corpus", extraCtes = extraCtes,
+      prefixCol = prefixCol)
 
   val defs: Map[String, Q] = Map(
     "q_dedup_exact" -> ((s, dir) =>
@@ -462,7 +355,7 @@ object LlmOps {
     // GENERATED verify-replay SQL: murmur-based candidate generation isn't
     // expressible in DuckDB, so the recorded candidate pairs enter as
     // literals and DuckDB independently recomputes shingling + Jaccard +
-    // threshold + ordering from raw documents (see [[lshCandidates]]).
+    // threshold + ordering from raw documents (see [[CandRec]]).
     "q_dedup_minhash_lsh" -> ((s, dir) => {
       val d = tbl(s, dir, "documents")
       // Signatures are NOT persisted: the native expression makes them a
@@ -476,7 +369,7 @@ object LlmOps {
       // record the candidate set once per corpus for the generated
       // verify-replay oracle (first invocation pays one collect of the
       // tiny persisted pair frame; later invocations hit the memo)
-      lshCandidates.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "lsh_cands")(
         recordPairs(dir, "lsh_cands", Seq((None, cands))))
       // exact-Jaccard verification of the candidate set only — shared
       // helper (shingles the candidate docs once, persisted; threshold
@@ -501,7 +394,7 @@ object LlmOps {
       val d = tbl(s, dir, "documents")
       val cands = Dedup.lshCandidatePairs(
         Dedup.minHashSignatures(d, "doc_id", "text")).persist()
-      lshCandidates.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "lsh_cands")(
         recordPairs(dir, "lsh_cands", Seq((None, cands))))
       val pairs = Dedup.verifyCandidates(d, "doc_id", "text",
           cands, "id_a", "id_b")
@@ -540,7 +433,7 @@ object LlmOps {
       // LSH query
       val cands = Dedup.incrementalCandidatePairs(s, d.where(isNew), "doc_id", "text", idx)
         .persist()
-      incCandidates.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "inc_cands")(
         recordPairs(dir, "inc_cands", Seq((None, cands))))
       Dedup.verifyCandidates(d, "doc_id", "text", cands, "id_new", "id_corpus")
     }),
@@ -582,7 +475,7 @@ object LlmOps {
         Dedup.minHashSignatures(d.where(isDay1), "doc_id", "text"))
       val s3 = Dedup.incrementalCandidatePairs(s, d.where(isDay2), "doc_id", "text", idx)
         .select(col("id_new").as("id_a"), col("id_corpus").as("id_b"))
-      fullCandidates.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "full_cands")(
         recordPairs(dir, "full_cands", Seq(
           (Some("probe_corpus"), s1),
           (Some("within_batch"), s2),
@@ -617,13 +510,13 @@ object LlmOps {
     "q_dedup_simhash" -> ((s, dir) => {
       val sigs = Dedup.simHashes(tbl(s, dir, "documents"), "doc_id", "text")
         .persist()
-      simhashSigs.computeIfAbsent(dir, _ => {
+      graft.io.Artifacts.once(dir, "simhash_rec") {
         val rec = sigs.limit(ReplayOracleCap + 1).collect().toSeq
         if (rec.size > ReplayOracleCap)
           Left(graft.io.Artifacts.replayOnce(dir, "simhash_sigs")(
             sigs.select(col("doc_id"), col("simhash").as("h"))))
         else Right(rec.map(r => (r.getLong(0), r.getLong(1))))
-      })
+      }
       Dedup.simHashPairs(sigs, SimHashMaxHamming)
         .orderBy("id_a", "id_b")
     }),
@@ -683,28 +576,32 @@ object LlmOps {
     // pure probe.
     "q_sim_ivfpq_ann" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
-      val rr = ivfPqReranks.computeIfAbsent(dir, _ =>
-        Similarity.adcRerank(e.count(), IvfNLists, IvfNProbe)).intValue
-      val (index, cb) = LlmOps.ivfPqIndexFor(dir, () =>
-        Similarity.fitIvfPq(e, nLists = IvfNLists, m = 8, ks = IvfPqKs,
-          dim = 64,
-          graft.io.TempDirs.createDeletedOnExit("graft_ivfpq_")
-            .getAbsolutePath))
+      // the rerank width is density-scaled per corpus (adcRerank's
+      // fraction-of-candidates law — a FIXED shortlist collapses as
+      // density grows; RecallLadderSpec pins the contrast), so it is
+      // stored with the fit for the generated oracle to replay. Its own
+      // index, not q_sim_ivf_ann's, so the two lifecycles stay independent
+      val (index, cb, rr) = graft.io.Artifacts.once(dir, "ivfpq_index") {
+        val (index, cb) = Similarity.fitIvfPq(e, nLists = IvfNLists, m = 8,
+          ks = IvfPqKs, dim = 64,
+          graft.io.TempDirs.createDeletedOnExit("graft_ivfpq_").getAbsolutePath)
+        (index, cb, Similarity.adcRerank(e.count(), IvfNLists, IvfNProbe))
+      }
       Similarity.probeIvfPq(e, e.filter(col("vec_id") % 50 === 0), k = AnnK,
           index, cb, nProbe = IvfNProbe, rerank = rr)
         .orderBy("query_id", "rnk")
     }),
     "q_sim_ivf_ann" -> ((s, dir) => {
       // fit/probe split in catalog form: the index (k-means + corpus
-      // partitioned by list_id) is built ONCE per corpus and memoized for
-      // the JVM; every invocation after that is a pure probe — the shape a
-      // production ANN service runs, where the index build is a layout job
-      // and queries only pay partition-pruned scans. Deterministic seed
+      // partitioned by list_id) is built ONCE per corpus content
+      // (Artifacts.once); every invocation after that is a pure probe —
+      // the shape a production ANN service runs, where the index build is
+      // a layout job and queries only pay partition-pruned scans. Deterministic seed
       // keeps the output identical to a fresh fit. ORACLED via the
       // generated replay SQL: since fitIvf assigns lists with the
       // replayable argmin fold, the recorded centroids alone let DuckDB
       // rebuild the whole index and recompute the probe end-to-end.
-      val index = LlmOps.ivfIndexFor(dir, () =>
+      val index = graft.io.Artifacts.once(dir, "ivf_index")(
         Similarity.fitIvf(tbl(s, dir, "embeddings"), nLists = IvfNLists,
           graft.io.TempDirs.createDeletedOnExit("graft_ivf_").getAbsolutePath))
       Similarity.probeIvf(s, index,
@@ -967,7 +864,7 @@ object LlmOps {
     "q_curate_pipeline_v2" -> ((s, dir) =>
       curateChain(s, dir,
         tbl(s, dir, "documents").filter(col("doc_id") % 5 === 0),
-        pipelineCands)),
+        "curate_v2_cands")),
     // CRAWL-DAY pipeline v3 — v2 with DRIFT-GATED ADMISSION as stage 0
     // (the round-14 verdict's composition): the day arrives as
     // DefaultChunks ingest batches (the established id-range staging
@@ -1036,7 +933,7 @@ object LlmOps {
       val admitted = batched
         .join(broadcast(quarantined), Seq("batch_id"), "left_anti")
         .drop("batch_id")
-      curateChain(s, dir, admitted, pipelineV3Cands)
+      curateChain(s, dir, admitted, "curate_v3_cands")
     }),
     // Embedding-cosine near-dup pairs above a threshold — exact semantics
     // via the chunk-salted pair join (see Similarity.thresholdPairs for why
@@ -1160,7 +1057,7 @@ object LlmOps {
       import graft.ops.SemanticDedup
       val e = tbl(s, dir, "embeddings")
       val cents = SemanticDedup.fitCentroids(e, "embedding", k = 8)
-      semanticCentroids.put(dir, cents)
+      graft.io.Artifacts.once(dir, "semantic_centroids")(cents)
       val assigned = e.select(col("vec_id"), col("embedding"),
         SemanticDedup.nearestCentroid(col("embedding"), cents).as("cluster"))
       SemanticDedup.dedupAssigned(assigned, "vec_id", "embedding",
@@ -1181,7 +1078,7 @@ object LlmOps {
       import graft.ops.SemanticDedup
       val e = tbl(s, dir, "embeddings")
       val cents = SemanticDedup.fitCentroids(e, "embedding", k = 10)
-      kmeansCentroids.put(dir, cents)
+      graft.io.Artifacts.once(dir, "kmeans_centroids")(cents)
       e.select(
           SemanticDedup.nearestCentroidDist(col("embedding"), cents).as("a"))
         .select(col("a.c").as("cluster"),
@@ -1206,7 +1103,7 @@ object LlmOps {
     "q_embed_pq" -> ((s, dir) => {
       import graft.ops.{ProductQuantizer => PQ}
       val e = tbl(s, dir, "embeddings")
-      val cb = pqCodebooks.computeIfAbsent(dir, _ =>
+      val cb = graft.io.Artifacts.once(dir, "pq_codebook")(
         PQ.fit(e, "vec_id", "embedding", dim = 64, m = 8, ks = 16))
       val recon = PQ.decodeExpr(PQ.encodeExpr(col("embedding"), cb), cb)
       e.withColumn("rcm",
@@ -1229,7 +1126,7 @@ object LlmOps {
     // projection bit-identically, micro-quantized at emission.
     "q_embed_pca" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
-      val m = pcaFits.computeIfAbsent(dir, _ =>
+      val m = graft.io.Artifacts.once(dir, "pca_fit")(
         graft.ops.Pca.fit(e, "embedding", dim = 64))
       e.select(col("vec_id"), col("label"),
           graft.ops.Pca.projectionMicro(col("embedding"), m).as("proj_micro"))
@@ -1249,7 +1146,7 @@ object LlmOps {
     // axis recovery are property-tested in PcaKSpec.
     "q_embed_pca_k" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
-      val m = pcaKFits.computeIfAbsent(dir, _ =>
+      val m = graft.io.Artifacts.once(dir, "pca_k_fit")(
         graft.ops.Pca.fitK(e, "embedding", dim = 64, k = PcaK))
       val cols = (0 until PcaK).flatMap { j =>
         Seq(
@@ -1640,14 +1537,14 @@ object LlmOps {
     * admitted `day` slice (v2 passes the raw %5==0 day; v3 its
     * drift-admitted remainder): blocklist gate, URL-canonical dedup,
     * bloom content-seen gate, within-day MinHash near-dup (candidates
-    * recorded into `candMemo` for the spliced replay oracle), funnel,
-    * exact dedup, mixture, pack manifest. Shared so the two pipelines
+    * recorded as artifact `candName` for the spliced replay oracle),
+    * funnel, exact dedup, mixture, pack manifest. Shared so the two pipelines
     * (and their generated oracles, which interpolate the same chain)
     * cannot drift.
     * `day` must carry (doc_id, source, text, lang, n_chars). */
   private def curateChain(s: org.apache.spark.sql.SparkSession, dir: String,
                           day: org.apache.spark.sql.DataFrame,
-                          candMemo: CandMemo): org.apache.spark.sql.DataFrame = {
+                          candName: String): org.apache.spark.sql.DataFrame = {
       val d = tbl(s, dir, "documents")
       val sub = when(col("doc_id") % 7 === 0, lit("cdn."))
         .when(col("doc_id") % 7 === 1, lit("www."))
@@ -1686,7 +1583,7 @@ object LlmOps {
       // 4. within-day MinHash near-dup, drop-if-smaller-neighbor
       val sigs = Dedup.minHashSignatures(fresh, "doc_id", "text")
       val cands = Dedup.lshCandidatePairs(sigs).persist()
-      candMemo.computeIfAbsent(dir, _ => pairsOf(cands, None))
+      graft.io.Artifacts.once(dir, candName)(pairsOf(cands, None))
       // localCheckpoint (r16, guide §3.3): dupDrop is broadcast-anti'd
       // into the emit chain, and mixToWeights' two deduped references
       // duplicated its whole verify-join subtree — the verify stage
@@ -1757,11 +1654,6 @@ object LlmOps {
   private[graft] val KnnProbeN = 20
   private[graft] val KnnK = 5
 
-  /** Static oracles plus the GENERATED q_dedup_semantic oracle (present
-    * once the query has run against exactly one corpus and recorded its
-    * fitted centroids — Verify's single-dir dump order guarantees that
-    * for the driver's full runs; see [[semanticCentroids]] for why a
-    * multi-corpus session omits the entry instead). */
   /** q_curate_pipeline_v2's generated one-CTE-chain oracle: the ONLY
     * literal splice is the MinHash candidate stage (murmur signatures
     * are not SQL-expressible); every other stage — blocklist,
@@ -1959,103 +1851,66 @@ object LlmOps {
        FROM cc GROUP BY shard, pack_id ORDER BY shard, pack_id"""
   }
 
+  /** Static oracles plus the GENERATED ones, each present once its query
+    * has recorded its fit or candidates on exactly one corpus
+    * ([[graft.io.Artifacts.single]]) — Verify runs every query before it
+    * dumps, so its single-dir runs emit them all. */
   def oracles: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val fitted = semanticCentroids.asScala.values.toSeq
-    val kfitted = kmeansCentroids.asScala.values.toSeq
-    staticOracles ++
-      (if (fitted.size == 1) Map("q_dedup_semantic" ->
-        graft.ops.SemanticDedup.oracleSql(fitted.head, SemanticThreshold))
-      else Map.empty) ++
-      (if (kfitted.size == 1) Map("q_embed_kmeans" ->
-        graft.ops.SemanticDedup.statsOracleSql(kfitted.head))
-      else Map.empty) ++
-      replayOracle(lshCandidates, "id_a", "id_b")
-        .map("q_dedup_minhash_lsh" -> _) ++ {
-        // q_dedup_clusters rides the SAME candidate memo (identical
-        // seeded signatures -> identical candidates), same one-dir
-        // emission rule, literal-or-sidecar like replayOracle
-        import scala.jdk.CollectionConverters._
-        lshCandidates.asScala.values.toSeq match {
-          case Seq(Right(rec)) =>
-            Map("q_dedup_clusters" -> graft.ops.Dedup.clusterReplayOracleSql(
-              rec, VerifyThreshold))
-          case Seq(Left(path)) =>
-            Map("q_dedup_clusters" ->
-              graft.ops.Dedup.clusterReplayOracleSqlFrom(path, VerifyThreshold))
-          case _ => Map.empty
-        }
-      } ++
-      replayOracle(incCandidates, "id_new", "id_corpus")
-        .map("q_dedup_incremental" -> _) ++ {
-        val rec = pipelineCands.asScala.values.toSeq
-        if (rec.size == 1 && rec.head.size <= ReplayOracleCap)
-          Map("q_curate_pipeline_v2" -> curateV2OracleSql(rec.head))
-        else Map.empty
-      } ++ {
-        val rec = pipelineV3Cands.asScala.values.toSeq
-        if (rec.size == 1 && rec.head.size <= ReplayOracleCap)
-          Map("q_curate_pipeline_v3" -> curateV3OracleSql(rec.head))
-        else Map.empty
-      } ++
-      replayOracle(fullCandidates, "id_a", "id_b", staged = true)
-        .map("q_dedup_incremental_full" -> _) ++ {
-        val recorded = simhashSigs.asScala.values.toSeq
-        recorded match {
-          // inline literals: brute-force all-pairs replay (self-contained)
-          case Seq(Right(sigs))
-              if sigs.nonEmpty && sigs.size <= ReplayOracleCap =>
-            Map("q_dedup_simhash" -> graft.ops.Dedup.simHashReplayOracleSql(
-              sigs, SimHashMaxHamming))
-          // over-cap sidecar: independently-banded join replay
-          case Seq(Left(path)) =>
-            Map("q_dedup_simhash" -> graft.ops.Dedup.simHashSidecarOracleSql(
-              path, SimHashMaxHamming))
-          case _ => Map.empty
-        }
-      } ++ {
-        // ANN tier: recorded fitted artifacts (centroids / codebooks —
-        // driver-tiny, never corpus-sized) replay the whole index in
-        // DuckDB. Same one-dir emission rule as the other fitted memos.
-        val ivfF = ivfIndexes.asScala.values.toSeq
-        val pqF = ivfPqIndexes.asScala.values.toSeq
-        val cbF = pqCodebooks.asScala.values.toSeq
-        (if (ivfF.size == 1) Map("q_sim_ivf_ann" ->
-          Similarity.ivfAnnOracleSql(ivfF.head.centroids, IvfNProbe, AnnK,
-            AnnQueryPred))
-        else Map.empty) ++
-        {
-          // rerank memo fills with the index memo (same query records
-          // both), so the one-dir rule covers the pair
-          val rrF = ivfPqReranks.asScala.values.toSeq
-          if (pqF.size == 1 && rrF.size == 1)
-            Map("q_sim_ivfpq_ann" ->
-              Similarity.ivfPqAnnOracleSql(pqF.head._1.centroids,
-                pqF.head._2, IvfNProbe, rrF.head.intValue, AnnK,
-                IvfPqQueryPred))
-          else Map.empty
-        } ++
-        (if (cbF.size == 1) Map("q_embed_pq" ->
-          graft.ops.ProductQuantizer.reconStatsOracleSql(cbF.head))
-        else Map.empty) ++ {
-          val pcaF = pcaFits.asScala.values.toSeq
-          if (pcaF.size == 1) Map("q_embed_pca" ->
-            graft.ops.Pca.projectionOracleSql(pcaF.head))
-          else Map.empty
-        } ++ {
-          val pcaKF = pcaKFits.asScala.values.toSeq
-          if (pcaKF.size == 1) Map("q_embed_pca_k" ->
-            graft.ops.Pca.projectionKOracleSql(pcaKF.head))
-          else Map.empty
-        } ++
-        // static: the hyperplanes regenerate from (dim, bits, seed)
-        Map("q_sim_lsh_ann" ->
-          Similarity.lshAnnOracleSql(dim = 64, bits = LshAnnBits, k = AnnK,
-            queryPred = AnnQueryPred, hammingRadius = 1))
-      }
+    import graft.io.Artifacts.single
+    type Sigs = Either[String, Seq[(Long, Long)]]
+    type Pairs = Seq[(Option[String], Long, Long)]
+    val gen: Seq[(String, Option[String])] = Seq(
+      "q_dedup_semantic" -> single[Seq[Array[Double]]]("semantic_centroids")
+        .map(graft.ops.SemanticDedup.oracleSql(_, SemanticThreshold)),
+      "q_embed_kmeans" -> single[Seq[Array[Double]]]("kmeans_centroids")
+        .map(graft.ops.SemanticDedup.statsOracleSql),
+      "q_dedup_minhash_lsh" -> replayOracle("lsh_cands", "id_a", "id_b"),
+      // q_dedup_clusters rides the SAME candidate recording (identical
+      // seeded signatures -> identical candidates)
+      "q_dedup_clusters" -> single[CandRec]("lsh_cands").map {
+        case Right(rec) =>
+          graft.ops.Dedup.clusterReplayOracleSql(rec, VerifyThreshold)
+        case Left(path) =>
+          graft.ops.Dedup.clusterReplayOracleSqlFrom(path, VerifyThreshold)
+      },
+      "q_dedup_incremental" -> replayOracle("inc_cands", "id_new", "id_corpus"),
+      "q_curate_pipeline_v2" -> single[Pairs]("curate_v2_cands")
+        .filter(_.size <= ReplayOracleCap).map(curateV2OracleSql),
+      "q_curate_pipeline_v3" -> single[Pairs]("curate_v3_cands")
+        .filter(_.size <= ReplayOracleCap).map(curateV3OracleSql),
+      "q_dedup_incremental_full" ->
+        replayOracle("full_cands", "id_a", "id_b", staged = true),
+      "q_dedup_simhash" -> single[Sigs]("simhash_rec").collect {
+        // inline literals: brute-force all-pairs replay (self-contained)
+        case Right(sigs) if sigs.nonEmpty && sigs.size <= ReplayOracleCap =>
+          graft.ops.Dedup.simHashReplayOracleSql(sigs, SimHashMaxHamming)
+        // over-cap sidecar: independently-banded join replay
+        case Left(path) =>
+          graft.ops.Dedup.simHashSidecarOracleSql(path, SimHashMaxHamming)
+      },
+      // ANN tier: recorded fitted artifacts (centroids / codebooks —
+      // driver-tiny, never corpus-sized) replay the whole index in DuckDB
+      "q_sim_ivf_ann" -> single[Similarity.IvfIndex]("ivf_index").map(ix =>
+        Similarity.ivfAnnOracleSql(ix.centroids, IvfNProbe, AnnK, AnnQueryPred)),
+      "q_sim_ivfpq_ann" -> single[(Similarity.IvfIndex,
+          graft.ops.ProductQuantizer.PqCodebook, Int)]("ivfpq_index").map {
+        case (ix, cb, rr) => Similarity.ivfPqAnnOracleSql(ix.centroids, cb,
+          IvfNProbe, rr, AnnK, IvfPqQueryPred)
+      },
+      "q_embed_pq" -> single[graft.ops.ProductQuantizer.PqCodebook]("pq_codebook")
+        .map(graft.ops.ProductQuantizer.reconStatsOracleSql),
+      "q_embed_pca" -> single[graft.ops.Pca.PcaModel]("pca_fit")
+        .map(graft.ops.Pca.projectionOracleSql),
+      "q_embed_pca_k" -> single[graft.ops.Pca.PcaKModel]("pca_k_fit")
+        .map(graft.ops.Pca.projectionKOracleSql))
+    staticOracles ++ gen.collect { case (q, Some(sql)) => q -> sql }
   }
 
   private val staticOracles: Map[String, String] = Map(
+    // the hyperplanes regenerate from (dim, bits, seed)
+    "q_sim_lsh_ann" ->
+      Similarity.lshAnnOracleSql(dim = 64, bits = LshAnnBits, k = AnnK,
+        queryPred = AnnQueryPred, hammingRadius = 1),
     "q_dedup_winnowing" ->
       graft.ops.Winnowing.oracleSql(k = 4, w = 4, maxDf = 50L, minShared = 5L),
     // The lexical arm replays q_text_bm25's validated arithmetic (same

@@ -34,45 +34,39 @@ object Multimodal {
     * rows-only. `Right` = inline literals, `Left` = sidecar path. */
   private val MultimodalReplayCap = 5000
 
-  /** Recorded per-doc dHashes, keyed by corpus dir — consumed by
-    * [[oracles]] to GENERATE q_multimodal_phash's verify-replay oracle:
-    * the hash itself needs the image codec (not SQL-expressible, golden-
-    * fixture-tested in MultimodalPhashSpec), but EVERYTHING downstream —
-    * the 8-band LSH pairing, the pigeonhole candidate set, the
-    * bit_count(xor) hamming verify, the per-doc counts, null-handling,
-    * ordering — replays in DuckDB from the recorded literals, exactly as
-    * q_dedup_simhash replays its signatures. */
-  private val phashSigs = new java.util.concurrent.ConcurrentHashMap[
-    String, Either[String, Seq[(Long, Long)]]]()
+  /* Recordings that [[oracles]] reads back through
+   * [[graft.io.Artifacts.single]] to GENERATE its replay oracles:
+   *
+   *  - `phash_rec`: per-doc dHashes for q_multimodal_phash. The hash
+   *    itself needs the image codec (not SQL-expressible, golden-
+   *    fixture-tested in MultimodalPhashSpec), but EVERYTHING downstream
+   *    — the 8-band LSH pairing, the pigeonhole candidate set, the
+   *    bit_count(xor) hamming verify, the per-doc counts, null-handling,
+   *    ordering — replays in DuckDB from the recorded literals, exactly
+   *    as q_dedup_simhash replays its signatures.
+   *  - `png_sizes_rec`: per-doc PNG byte sizes for q_multimodal_decode
+   *    (the one decode output that is genuinely codec-private —
+   *    DEFLATE's compressed length). The REST of the decode row is
+   *    recomputed independently by DuckDB: payload_bytes from
+   *    octet_length, width/height from the encoder's closed-form frame
+   *    geometry, and px_sum as the true byte sum of the payload (get_bit
+   *    over the blob) — so a decoder that misreads the PNG header or
+   *    mis-walks pixels hash-mismatches against arithmetic DuckDB did
+   *    from scratch.
+   *  - `ingest_dir`: q_multimodal_ingest's corpus dir when its layout is
+   *    replayable ([[replayableIngestDir]]), for the read_blob replay.
+   */
 
-  /** Recorded per-doc PNG byte sizes (the one decode output that is
-    * genuinely codec-private — DEFLATE's compressed length), keyed by
-    * corpus dir — consumed by [[oracles]] to GENERATE
-    * q_multimodal_decode's oracle. The REST of the decode row is
-    * recomputed independently by DuckDB: payload_bytes from
-    * octet_length, width/height from the encoder's closed-form frame
-    * geometry, and px_sum as the true byte sum of the payload (get_bit
-    * over the blob) — so a decoder that misreads the PNG header or
-    * mis-walks pixels hash-mismatches against arithmetic DuckDB did
-    * from scratch. */
-  private val pngSizes = new java.util.concurrent.ConcurrentHashMap[
-    String, Either[String, Seq[(Long, Int)]]]()
-
-  /** Recorded ingest corpus dirs (dir -> layout replayable) — consumed
-    * by [[oracles]] to GENERATE q_multimodal_ingest's read_blob replay.
-    * Replayable = every `*.parquet` entry is a flat FILE or a ONE-level
-    * dataset DIRECTORY of `*.parquet` part files (the driver's flat
-    * layout and ScaleUpMain's staged datasets) — covered by a two-glob
-    * read_blob list, `<dir>/STAR.parquet` plus
-    * `<dir>/STAR.parquet/STAR.parquet` (read_blob skips directories a
-    * glob matches and tolerates a no-match glob; verified empirically).
-    * Deeper nesting — which Spark's recursive lookup WOULD
-    * find — records false and falls back to rows-only, the same designed
-    * fallback as the over-cap literal memos. */
-  private val ingestDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  private def recordIngestDir(dir: String): Unit = {
+  /** `dir` when q_multimodal_ingest's read_blob replay covers its layout:
+    * every `*.parquet` entry is a flat FILE or a ONE-level dataset
+    * DIRECTORY of `*.parquet` part files (the driver's flat layout and
+    * ScaleUpMain's staged datasets) — covered by a two-glob read_blob
+    * list, `<dir>/STAR.parquet` plus `<dir>/STAR.parquet/STAR.parquet`
+    * (read_blob skips directories a glob matches and tolerates a
+    * no-match glob; verified empirically). Deeper nesting — which
+    * Spark's recursive lookup WOULD find — gives None and falls back to
+    * rows-only, the same designed fallback as the over-cap literals. */
+  private def replayableIngestDir(dir: String): Option[String] = {
     // Replayability demands exact FILE-SET parity between Spark's
     // recursive binaryFile lookup and the oracle's two-glob read_blob
     // (review catches):
@@ -92,7 +86,7 @@ object Multimodal {
           c.isFile && !hiddenParquet(c.getName))
     val entries = Option(new java.io.File(dir).listFiles()).toSeq.flatten
     val pathSafe = !dir.exists(c => "'\"*?[]{}".contains(c))
-    ingestDirs.put(dir, pathSafe &&
+    Some(dir).filter(_ => pathSafe &&
       entries.exists(e => e.getName.endsWith(".parquet") && !hiddenParquet(e.getName)) &&
       entries.forall(entryOk))
   }
@@ -358,7 +352,7 @@ object Multimodal {
     // corpora, via a two-glob read_blob list); deeper nesting falls
     // back to rows-only (MultimodalIngestSpec covers the invariants).
     "q_multimodal_ingest" -> ((s, dir) => {
-      recordIngestDir(dir)
+      graft.io.Artifacts.once(dir, "ingest_dir")(replayableIngestDir(dir))
       decodeBatch(
         graft.io.Sources.binaryFiles(s, dir, glob = "*.parquet")
           .select(
@@ -405,14 +399,14 @@ object Multimodal {
           tbl(s, dir, "documents")
             .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")))
           .select(col("doc_id"), col("media"))).persist()
-      phashSigs.computeIfAbsent(dir, _ => {
+      graft.io.Artifacts.once(dir, "phash_rec") {
         val rec = hashed.select(col("doc_id"), col("dhash"))
           .limit(MultimodalReplayCap + 1).collect().toSeq
         if (rec.size > MultimodalReplayCap)
           Left(graft.io.Artifacts.replayOnce(dir, "phash_sigs")(
             hashed.select(col("doc_id"), col("dhash").as("h"))))
         else Right(rec.map(r => (r.getLong(0), r.getLong(1))))
-      })
+      }
       // Candidates from BAND-PAIR collisions (2-of-8), not single bands.
       // Pigeonhole: hamming ≤ 6 dirties ≤ 6 of the 8 byte-bands, so ≥ 2
       // bands survive intact and the pair collides on that band PAIR —
@@ -488,14 +482,14 @@ object Multimodal {
           length(col("media")).as("png_bytes"),
           col("width"), col("height"), col("px_sum"))
         .persist() // recording collect + the dump read the same run
-      pngSizes.computeIfAbsent(dir, _ => {
+      graft.io.Artifacts.once(dir, "png_sizes_rec") {
         val rec = decoded.select(col("doc_id"), col("png_bytes"))
           .limit(MultimodalReplayCap + 1).collect().toSeq
         if (rec.size > MultimodalReplayCap)
           Left(graft.io.Artifacts.replayOnce(dir, "png_sizes")(
             decoded.select(col("doc_id"), col("png_bytes"))))
         else Right(rec.map(r => (r.getLong(0), r.getInt(1))))
-      })
+      }
       decoded.orderBy("doc_id")
     })
   )
@@ -627,8 +621,8 @@ object Multimodal {
     * engines; /16 is a power-of-two scale (exact); the final floor
     * rounding is queries.round6 on both sides. */
   private def ingestReplayOracleSql(dir: String): String = {
-    // recordIngestDir refuses quote/glob-metachar paths, so this escape
-    // is belt-and-braces against a future caller bypassing the memo
+    // replayableIngestDir refuses quote/glob-metachar paths, so this
+    // escape is belt-and-braces against a future caller bypassing it
     val d = dir.replace("'", "''")
     val nf = StubCodec.NumFeatures
     s"""WITH f AS (
@@ -651,35 +645,25 @@ object Multimodal {
        FROM feat ORDER BY file_name"""
   }
 
-  /** Static oracles plus the generated verify-replay pair — def, not
-    * val: the replay entries exist only after their query has run and
-    * recorded literals (the LlmOps emission rule: exactly one corpus
-    * dir, under the cap, else rows-only). */
+  /** Static oracles plus the generated replay trio — def, not val: the
+    * replay entries exist only after their query has run and recorded
+    * (the [[graft.io.Artifacts.single]] emission rule; literals only
+    * under the cap). */
   def oracles: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val ph = phashSigs.asScala.values.toSeq
-    val pz = pngSizes.asScala.values.toSeq
-    val ing = ingestDirs.asScala.toSeq
+    import graft.io.Artifacts.single
     staticOracles ++
-      (ph match {
-        case Seq(Right(sigs))
-            if sigs.nonEmpty && sigs.size <= MultimodalReplayCap =>
-          Map("q_multimodal_phash" -> phashReplayOracleSql(sigs))
-        case Seq(Left(path)) =>
-          Map("q_multimodal_phash" -> phashSidecarOracleSql(path))
-        case _ => Map.empty
-      }) ++
-      (pz match {
-        case Seq(Right(sizes))
-            if sizes.nonEmpty && sizes.size <= MultimodalReplayCap =>
-          Map("q_multimodal_decode" -> decodeReplayOracleSql(sizes))
-        case Seq(Left(path)) =>
-          Map("q_multimodal_decode" -> decodeSidecarOracleSql(path))
-        case _ => Map.empty
-      }) ++
-      (if (ing.size == 1 && ing.head._2)
-        Map("q_multimodal_ingest" -> ingestReplayOracleSql(ing.head._1))
-      else Map.empty)
+      single[Either[String, Seq[(Long, Long)]]]("phash_rec").collect {
+        case Right(sigs) if sigs.nonEmpty && sigs.size <= MultimodalReplayCap =>
+          "q_multimodal_phash" -> phashReplayOracleSql(sigs)
+        case Left(path) => "q_multimodal_phash" -> phashSidecarOracleSql(path)
+      } ++
+      single[Either[String, Seq[(Long, Int)]]]("png_sizes_rec").collect {
+        case Right(sizes) if sizes.nonEmpty && sizes.size <= MultimodalReplayCap =>
+          "q_multimodal_decode" -> decodeReplayOracleSql(sizes)
+        case Left(path) => "q_multimodal_decode" -> decodeSidecarOracleSql(path)
+      } ++
+      single[Option[String]]("ingest_dir").flatten
+        .map(d => "q_multimodal_ingest" -> ingestReplayOracleSql(d))
   }
 
   private val staticOracles: Map[String, String] = Map(

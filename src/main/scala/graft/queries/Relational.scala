@@ -175,52 +175,27 @@ object Relational {
     (v1, v2)
   }
 
-  /** Executed round counts of the convergence-driven graph loops, keyed
-    * by corpus dir — the q_dedup_semantic recording pattern: the BFS /
-    * k-core queries iterate to their (unique, confluent) fixpoints and
-    * RECORD how many rounds that took, and [[oracles]] generates the
-    * DuckDB round-replay CTE chain from the recorded count. With zero or
-    * conflicting recordings the oracle falls back to the legacy fixed
-    * horizon (10 / 8 — fixpoint-verified at every catalog sf), so the
-    * gate never weakens; with a recording the replay matches the
-    * executed rounds bit-for-bit at ANY depth. */
-  private val bfsRoundsRun = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private val kcoreRoundsRun = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Recorded HLL estimates of q_agg_approx_distinct, keyed by corpus
-    * dir — its verify-replay oracle's literal side (one row per return
-    * flag; schema-bounded). One-dir emission rule like the LlmOps
-    * memos: zero or conflicting recordings fall back to rows-only. */
-  private val approxDistinctRec =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
-  private def approxDistinctOracleSql: Option[String] = {
-    import scala.jdk.CollectionConverters._
-    val rec = approxDistinctRec.asScala.values.toSeq
-    if (rec.size != 1 || rec.head.isEmpty) None
-    else {
-      val vals = rec.head
+  /** q_agg_approx_distinct's verify-replay oracle over its recorded HLL
+    * estimates (artifact `approx_distinct_rec`: one row per return flag,
+    * schema-bounded) as literals. */
+  private def approxDistinctOracleSql: Option[String] =
+    graft.io.Artifacts.single[Seq[(String, Long)]]("approx_distinct_rec")
+      .filter(_.nonEmpty).map { rec =>
+      val vals = rec
         .map { case (f, n) => s"('$f', CAST($n AS BIGINT))" }.mkString(", ")
       // Exact counts drive the join: a flag the recording missed emits a
       // NULL row (hash mismatch), an out-of-bound estimate nulls out,
       // and a recorded flag the corpus lacks leaves the oracle short a
       // row — every failure direction flags.
-      Some(s"""WITH rec(l_returnflag, approx_parts) AS (VALUES $vals),
+      s"""WITH rec(l_returnflag, approx_parts) AS (VALUES $vals),
          exact AS (SELECT l_returnflag, count(DISTINCT l_partkey) AS n
                    FROM lineitem GROUP BY 1)
          SELECT e.l_returnflag,
                 CASE WHEN abs(r.approx_parts - e.n) <= greatest(1, 0.06 * e.n)
                      THEN r.approx_parts END AS approx_parts
          FROM exact e LEFT JOIN rec r USING (l_returnflag)
-         ORDER BY e.l_returnflag""")
+         ORDER BY e.l_returnflag"""
     }
-  }
-
-  /** Recorded GK-sketch quantile estimates of q_agg_approx_quantiles —
-    * same lifecycle as [[approxDistinctRec]] (schema-bounded: flags ×
-    * percentiles rows). */
-  private val approxQuantRec = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Int, Double)]]()
 
   /** percentile_approx's accuracy knob — rank error <= n/accuracy. ONE
     * definition shared by the query and the generated oracle's bound. */
@@ -238,22 +213,20 @@ object Relational {
   private val CmConf = 0.99
   private val CmSeed = 42
   private val CmProbeKeys = (1L to 20L).toSeq
-  private val countMinRec = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Long)]]()
 
-  private def countMinOracleSql: Option[String] = {
-    import scala.jdk.CollectionConverters._
-    val rec = countMinRec.asScala.values.toSeq
-    if (rec.size != 1 || rec.head.isEmpty) None
-    else {
-      val vals = rec.head.map { case (k, e) =>
+  /** q_agg_countmin's verify-replay oracle over its recorded estimates
+    * (artifact `countmin_rec`: one row per probe key). */
+  private def countMinOracleSql: Option[String] =
+    graft.io.Artifacts.single[Seq[(Long, Long)]]("countmin_rec")
+      .filter(_.nonEmpty).map { rec =>
+      val vals = rec.map { case (k, e) =>
         s"($k, CAST($e AS BIGINT))"
       }.mkString(", ")
       val keys = CmProbeKeys.mkString(", ")
       // exact side drives the probe-key domain; a missing key, an
       // underestimate (impossible for a correct CM), or an overestimate
       // beyond 3*eps*N all null out and hash-mismatch
-      Some(s"""WITH rec(l_partkey, est_count) AS (VALUES $vals),
+      s"""WITH rec(l_partkey, est_count) AS (VALUES $vals),
          n AS (SELECT count(*) AS total FROM lineitem),
          exact AS (SELECT k.l_partkey,
              (SELECT count(*) FROM lineitem li
@@ -264,16 +237,16 @@ object Relational {
                  AND r.est_count <= e.c + 3 * $CmEps * n.total
                 THEN r.est_count END AS est_count
          FROM exact e LEFT JOIN rec r USING (l_partkey) CROSS JOIN n
-         ORDER BY e.l_partkey""")
+         ORDER BY e.l_partkey"""
     }
-  }
 
-  private def approxQuantOracleSql: Option[String] = {
-    import scala.jdk.CollectionConverters._
-    val rec = approxQuantRec.asScala.values.toSeq
-    if (rec.size != 1 || rec.head.isEmpty) None
-    else {
-      val vals = rec.head.map { case (f, p, e) =>
+  /** q_agg_approx_quantiles' verify-replay oracle over its recorded GK
+    * estimates (artifact `approx_quantiles_rec`: flags × percentiles
+    * rows, schema-bounded). */
+  private def approxQuantOracleSql: Option[String] =
+    graft.io.Artifacts.single[Seq[(String, Int, Double)]]("approx_quantiles_rec")
+      .filter(_.nonEmpty).map { rec =>
+      val vals = rec.map { case (f, p, e) =>
         s"('$f', $p, CAST(${java.lang.Double.toString(e)} AS DOUBLE))"
       }.mkString(", ")
       val pctDom = QuantPcts.map(p => s"($p)").mkString(", ")
@@ -284,7 +257,7 @@ object Relational {
       // drives the join, so a missing flag, a missing percentile, or an
       // out-of-bound estimate all null out and hash-mismatch.
       val e = s"${2.0 / QuantAccuracy}"
-      Some(s"""WITH rec(l_returnflag, pct, est) AS (VALUES $vals),
+      s"""WITH rec(l_returnflag, pct, est) AS (VALUES $vals),
          dom AS (SELECT f.l_returnflag, p.pct
                  FROM (SELECT DISTINCT l_returnflag FROM lineitem) f
                  CROSS JOIN (VALUES $pctDom) p(pct)),
@@ -300,26 +273,8 @@ object Relational {
                 THEN c.est END AS est
          FROM dom d LEFT JOIN cnts c
            ON c.l_returnflag = d.l_returnflag AND c.pct = d.pct
-         ORDER BY d.l_returnflag, d.pct""")
+         ORDER BY d.l_returnflag, d.pct"""
     }
-  }
-
-  /** The round count to replay: the single recorded value, the legacy
-    * fixed horizon when the query never ran this JVM (fixpoint-verified
-    * at every catalog sf, and unused anyway — no result to compare), or
-    * NONE on conflicting multi-dir recordings — replaying EITHER depth
-    * would assert a wrong expected result for the other corpus, so the
-    * oracle drops to rows-only like every other conflicted memo
-    * (round-13 review catch; previously the conflict case wrongly fell
-    * back to the fixed horizon). */
-  private def recordedRounds(
-      memo: java.util.concurrent.ConcurrentHashMap[String, Integer],
-      fallback: Int): Option[Int] = {
-    import scala.jdk.CollectionConverters._
-    val vs = memo.asScala.values.toSet
-    if (vs.size > 1) None
-    else Some(vs.headOption.map(_.intValue).getOrElse(fallback))
-  }
 
   val defs: Map[String, Q] = Map(
     // -- aggregation family ------------------------------------------------
@@ -366,7 +321,7 @@ object Relational {
         .groupBy("l_returnflag")
         .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"))
         .orderBy("l_returnflag")
-      approxDistinctRec.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "approx_distinct_rec")(
         df.collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
       df
     }),
@@ -391,7 +346,7 @@ object Relational {
           element_at(array(QuantPcts.map(lit): _*), col("i") + 1).as("pct"),
           col("est"))
         .orderBy("l_returnflag", "pct")
-      approxQuantRec.computeIfAbsent(dir, _ =>
+      graft.io.Artifacts.once(dir, "approx_quantiles_rec")(
         df.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getDouble(2))))
       df
     }),
@@ -418,7 +373,7 @@ object Relational {
       val sk = org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
       val rec = CmProbeKeys.map(k =>
         (k, sk.estimateCount(java.lang.Long.valueOf(k))))
-      countMinRec.computeIfAbsent(dir, _ => rec)
+      graft.io.Artifacts.once(dir, "countmin_rec")(rec)
       import s.implicits._
       rec.toDF("l_partkey", "est_count").orderBy("l_partkey")
     }),
@@ -951,7 +906,7 @@ object Relational {
       val sym = pairs.unionByName(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
       val (core, rounds) = graft.ops.KCore.peelConverged(sym, k = 2)
-      kcoreRoundsRun.put(dir, rounds)
+      graft.io.Artifacts.once(dir, "kcore_rounds")(rounds)
       core.orderBy("id")
     }),
     // Modularity scoring (Newman-Girvan Q) of a vertex partition over
@@ -1019,7 +974,7 @@ object Relational {
         pairs.select(col("dst").as("src"), col("src").as("dst")))
       val (dist, rounds) =
         graft.ops.Bfs.distancesConverged(sym, col("id") % 50 === 0)
-      bfsRoundsRun.put(dir, rounds)
+      graft.io.Artifacts.once(dir, "bfs_rounds")(rounds)
       dist.orderBy("id")
     }),
     // Skew mitigation by salting: append a deterministic salt to the fact
@@ -2141,13 +2096,14 @@ object Relational {
          UNION ALL SELECT dst AS src, src AS dst FROM pr"""
 
   // def, not val: the kcore/bfs oracles replay the round counts the
-  // convergence-driven queries RECORDED at run time (see bfsRoundsRun) —
-  // a val would freeze the legacy horizons before any query ran.
+  // convergence-driven queries RECORDED at run time (artifacts
+  // `kcore_rounds` / `bfs_rounds`; the replay matches the executed rounds
+  // bit-for-bit at any depth), and the sketch oracles the estimates.
   def oracles: Map[String, String] = staticOracles ++
-    recordedRounds(kcoreRoundsRun, fallback = 8).map(r =>
+    graft.io.Artifacts.single[Int]("kcore_rounds").map(r =>
       "q_graph_kcore" -> graft.ops.KCore.oracleSql(CoPurchaseEdgesSql,
         k = 2, rounds = r)) ++
-    recordedRounds(bfsRoundsRun, fallback = 10).map(r =>
+    graft.io.Artifacts.single[Int]("bfs_rounds").map(r =>
       "q_graph_bfs" -> graft.ops.Bfs.oracleSql(CoPurchaseEdgesSql,
         seedSql = "src % 50 = 0", rounds = r)) ++
     approxDistinctOracleSql.map("q_agg_approx_distinct" -> _) ++

@@ -38,8 +38,9 @@ class CatalogContractSpec extends SparkSpec {
     // records its literals/dir, so the test FIRST builds the three
     // queries (recording happens at build time) — otherwise the
     // rows-only count depends on which suites ran earlier in the same
-    // JVM. (Every suite uses the same sf0.001 dir, so the ingest
-    // oracle's one-flat-dir emission rule holds JVM-wide.)
+    // JVM. (Artifacts.single emits a recording only while exactly one
+    // corpus holds a valid one; the three queries' recordings come from
+    // sf0.001 alone, whose flat layout the ingest replay covers.)
     Seq("q_multimodal_phash", "q_multimodal_decode", "q_multimodal_ingest")
       .foreach(q => SparkEntry.queries(q)(spark, sf001))
     val txt = new String(java.nio.file.Files.readAllBytes(

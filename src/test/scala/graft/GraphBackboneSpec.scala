@@ -91,10 +91,11 @@ class GraphBackboneSpec extends SparkSpec {
   test("a corpus rewritten in place is refitted: q_graph_kcore, q_bpe_apply, klRefFor") {
     val corpus = copyOfSf001("refit_corpus_")
     val fresh = copyOfSf001("refit_fresh_")
-    def results(dir: String) = (
-      SparkEntry.queries("q_graph_kcore")(spark, dir).collect().toSeq,
-      SparkEntry.queries("q_bpe_apply")(spark, dir).collect().toSeq,
-      TextQueries.klRefFor(spark, dir))
+    val fitted = Seq("q_graph_kcore", "q_bpe_apply", "q_embed_pca", "q_embed_pq",
+      "q_sim_ivf_ann")
+    def results(dir: String): Map[String, Any] =
+      fitted.map(q => q -> SparkEntry.queries(q)(spark, dir).collect().toSeq).toMap +
+        ("klRefFor" -> TextQueries.klRefFor(spark, dir))
     val before = results(corpus)
 
     // the rewrite lands in both copies; `fresh` has never been fitted
@@ -105,20 +106,41 @@ class GraphBackboneSpec extends SparkSpec {
       for (dir <- Seq(corpus, fresh))
         rows.write.mode("overwrite").parquet(s"$dir/$table.parquet")
     }
-    // a denser co-purchase graph, and text with other character-pair and
+    // a denser co-purchase graph, text with other character-pair and
     // term statistics (a bijective rewrite such as reversal would not do:
-    // BPE token counts are invariant under it)
+    // BPE token counts are invariant under it), and fewer embeddings
+    // (the PCA, PQ and IVF fits all see other vectors)
     rewrite("lineitem")(_.withColumn("l_partkey", col("l_partkey") % 40))
     rewrite("documents")(_.withColumn("text", regexp_replace(col("text"), "e", "")))
+    rewrite("embeddings")(_.filter(col("vec_id") % 7 =!= 0))
 
     val after = results(corpus)
     val expected = results(fresh)
-    assert(expected._1 != before._1 && expected._2 != before._2 &&
-      expected._3 != before._3, "the rewrite must change every result")
-    val stale = Seq(
-      "q_graph_kcore" -> (after._1 == expected._1),
-      "q_bpe_apply" -> (after._2 == expected._2),
-      "klRefFor" -> (after._3 == expected._3)).collect { case (n, false) => n }
+    val unchanged = expected.keys.filter(k => expected(k) == before(k))
+    assert(unchanged.isEmpty, s"the rewrite must change every result: $unchanged")
+    val stale = expected.keys.filter(k => after(k) != expected(k)).toSeq.sorted
     assert(stale.isEmpty, s"stale fits served after the rewrite: $stale")
+  }
+
+  test("single emits a recording only while exactly one corpus holds a valid one") {
+    val (a, b) = (tmpDir("single_a_"), tmpDir("single_b_"))
+    def write(dir: String, text: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t.txt"), text)
+    def single = Artifacts.single[String]("spec_single")
+    def record(dir: String, v: String): Unit = Artifacts.once(dir, "spec_single")(v)
+    write(a, "a"); write(b, "b")
+    assert(single.isEmpty, "nothing recorded yet")
+    record(a, "a1")
+    assert(single.contains("a1"), "one corpus recorded")
+    record(b, "b1")
+    assert(single.isEmpty, "two corpora recorded")
+    write(a, "a, rewritten")
+    assert(single.contains("b1"), "a's recording is stale, b's alone is valid")
+    record(a, "a2")
+    assert(single.isEmpty, "a re-recorded: two valid recordings again")
+    write(b, "b, rewritten")
+    assert(single.contains("a2"), "b's recording is stale, a's alone is valid")
+    write(a, "a, rewritten twice")
+    assert(single.isEmpty, "every recording is stale")
   }
 }

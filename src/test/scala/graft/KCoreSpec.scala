@@ -65,10 +65,10 @@ class KCoreSpec extends SparkSpec {
   }
 
   test("the catalog query's 8-round horizon reaches the fixpoint at sf0.001 and sf0.01") {
-    // q_graph_kcore peels to convergence; its oracle falls back to an
-    // 8-round replay when no executed count was recorded — this pins that
-    // 8 rounds IS the fixpoint on the catalog corpus (one more round
-    // changes nothing), so that fallback replays the true 2-core
+    // q_graph_kcore peels to convergence and its oracle replays the
+    // recorded round count; this pins the peel operator at a fixed 8-round
+    // horizon: 8 rounds IS the fixpoint on the catalog corpus (one more
+    // round changes nothing) and leaves the true 2-core
     // (measured peel depths: 2 at sf0.001, 4 at sf0.01, 6 at sf0.1).
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val pairs = graft.ops.Triangles.coPairs(

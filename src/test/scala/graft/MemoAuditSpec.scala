@@ -3,10 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level audit of every `ConcurrentHashMap` construction in main.
-  * A JVM-lifetime map keyed by a corpus path is a fit memo that serves a
-  * stale fit once the corpus is rewritten in place; fit-once artifacts go
-  * through `graft.io.Artifacts.once`, which refits on changed content.
-  * Each remaining map must carry its reason here. A new map fails the
+  * A JVM-lifetime map keyed by a corpus path is a fit memo or an oracle
+  * recording that serves a stale value once the corpus is rewritten in
+  * place; fits and recordings go through `graft.io.Artifacts.once`, which
+  * refits on changed content, and oracles read recordings back through
+  * `Artifacts.single`, which ignores a stale one. Each remaining map must
+  * carry its reason here. A new map fails the
   * suite until it goes through `Artifacts.once` or its file's count and
   * reason are updated HERE; a removed one fails as stale. Constructions
   * through a `type X = ConcurrentHashMap[...]` alias count as maps.
@@ -20,15 +22,7 @@ class MemoAuditSpec extends AnyFunSuite {
     "Bucketing.scala" -> (1,
       "lock: one monitor per bucketed table name, so racing ensureBucketed calls cannot both drop and re-create it"),
     "StreamOps.scala" -> (1,
-      "stager: staged stream-source chunk dirs per (source, key, chunks), so every run of a stream replays the same drops"),
-    "LlmOps.scala" -> (14,
-      "oracle recordings and the fits oracles() replays: IVF, IVF-PQ and PQ fits, semantic and k-means centroids, PCA and top-k PCA fits, the IVF-PQ rerank width, five LSH candidate recordings and the SimHash signatures"),
-    "Events.scala" -> (1,
-      "oracle recording: q_agg_sketch_tiles rows"),
-    "Relational.scala" -> (5,
-      "oracle recordings: BFS and k-core executed rounds, approx-distinct, approx-quantile and count-min estimates"),
-    "Multimodal.scala" -> (3,
-      "oracle recordings: dHash signatures, PNG byte sizes and the ingest dirs' replayability"))
+      "stager: staged stream-source chunk dirs per (source, key, chunks), so every run of a stream replays the same drops"))
 
   test("every ConcurrentHashMap construction in main is allowlisted with a reason") {
     def walk(f: java.io.File): Seq[java.io.File] =

@@ -20,27 +20,34 @@ class TopKPropSpec extends SparkSpec {
   } yield (group, value)
 
   test("heap-pruned rank trio matches the single-phase window (100 random tables)") {
-    for (i <- 0 until 100) {
-      val rows = Gen.listOfN(200, rowGen)
-        .apply(Gen.Parameters.default, Seed(i.toLong)).get
-        .zipWithIndex.map { case ((g, v), id) => (g, v.toDouble, id.toLong) }
-      val df = rows.toDF("g", "v", "id").repartition(7) // multiple partitions
-      val k = 1 + i % 7
+    // seeds sharing a k run as one execution: each seed's table keeps its
+    // own repartition(7) and is tagged with its seed `t`, and both sides
+    // rank per (t, g), so every table is ranked exactly as if run alone
+    for ((k, seeds) <- (0 until 100).groupBy(i => 1 + i % 7).toSeq.sortBy(_._1)) {
+      val df = seeds.sorted.map { i =>
+        val rows = Gen.listOfN(200, rowGen)
+          .apply(Gen.Parameters.default, Seed(i.toLong)).get
+          .zipWithIndex.map { case ((g, v), id) => (i, g, v.toDouble, id.toLong) }
+        rows.toDF("t", "g", "v", "id").repartition(7) // multiple partitions
+      }.reduce(_ union _)
       val keys = Seq("v" -> false, "id" -> true)
-      val got = TopK.rankTrio(df, Seq("g"), keys, k)
-        .select("g", "v", "id", "rn", "rnk", "drnk")
-        .orderBy("g", "rn")
+      val got = TopK.rankTrio(df, Seq("t", "g"), keys, k)
+        .select("t", "g", "v", "id", "rn", "rnk", "drnk")
+        .orderBy("t", "g", "rn")
         .collect().map(_.toSeq).toSeq
-      val w = Window.partitionBy("g").orderBy(col("v").desc, col("id").asc)
+      val w = Window.partitionBy("t", "g").orderBy(col("v").desc, col("id").asc)
       val want = df
         .withColumn("rn", row_number().over(w))
         .withColumn("rnk", rank().over(w))
         .withColumn("drnk", dense_rank().over(w))
         .filter(col("rn") <= k)
-        .select("g", "v", "id", "rn", "rnk", "drnk")
-        .orderBy("g", "rn")
+        .select("t", "g", "v", "id", "rn", "rnk", "drnk")
+        .orderBy("t", "g", "rn")
         .collect().map(_.toSeq).toSeq
-      assert(got == want, s"mismatch at seed=$i k=$k")
+      def seed(rows: Seq[Seq[Any]], i: Int) = rows.filter(_.head == i)
+      val firstBad = seeds.sorted.find(i => seed(got, i) != seed(want, i))
+      assert(firstBad.isEmpty && got == want,
+        s"mismatch at seed=${firstBad.getOrElse("?")} k=$k")
     }
   }
 

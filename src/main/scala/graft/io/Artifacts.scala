@@ -180,7 +180,7 @@ object Artifacts {
 
   /** One listing of `dir`: (relative path, length, mtime) of every file,
     * sorted. Only length and mtime are read: the local file system loads
-    * permission and owner lazily, through a forked shell. */
+    * permission and owner lazily, through a forked `ls -ld`. */
   private def fingerprint(dir: String): Seq[(String, Long, Long)] = {
     val top = new Path(dir)
     val f = fs(SparkSession.active, top)

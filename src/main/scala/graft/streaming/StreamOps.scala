@@ -173,18 +173,6 @@ object StreamOps {
     }
   }
 
-  /** Checkpoint-manager selection (r17, measured; see the scaladoc of
-    * [[NioCheckpointFileManager]]): every [[ckpt]] location
-    * is a local POSIX path by construction (TempDirs.base is a
-    * java.nio Path), and on local paths the default FileContext manager
-    * pays ~45 ms of no-native-hadoop shell forks PER atomic write —
-    * ~19 such writes per micro-batch once the per-partition state-store
-    * delta commits are counted. The nio manager is the correct local
-    * implementation of the same protocol (hidden temp + atomic rename);
-    * a deployment checkpointing to HDFS/S3 must NOT set this key — its
-    * TempDirs/ckpt seam would not be a local path in the first place. */
-  private val CfmConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-
   /** The short-run policy every stream run here executes `body` under.
     *
     * Stateful operators allocate one state store per shuffle partition,
@@ -192,15 +180,14 @@ object StreamOps {
     * run (4 chunked micro-batches here) that fixed cost dominates, so the
     * stream runs with 4 shuffle/state partitions (state here is tiny; a
     * long-lived production stream with real state volume would keep the
-    * session default), the nio checkpoint manager, and `provider` as the
-    * state store when one is given. Per-run invariants a caller hoists
-    * out of its micro-batch loop are built inside `body`, so a throw
-    * there still restores the session. */
+    * session default), and `provider` as the state store when one is
+    * given. Per-run invariants a caller hoists out of its micro-batch
+    * loop are built inside `body`, so a throw there still restores the
+    * session. */
   private def shortRun[T](s: SparkSession, provider: Option[String] = None)
                          (body: => T): T =
-    withConf(s, Seq("spark.sql.shuffle.partitions" -> "4",
-        CfmConfKey -> classOf[NioCheckpointFileManager].getName) ++
-      provider.map(RocksDbProviderConf._1 -> _): _*)(body)
+    withConf(s, ("spark.sql.shuffle.partitions" -> "4") +:
+      provider.map(RocksDbProviderConf._1 -> _).toSeq: _*)(body)
 
   /** Explicit per-query checkpoint dir under [[graft.io.TempDirs.base]].
     * Left unset, Spark creates the temp checkpoint under

@@ -3,6 +3,9 @@ package graft
 import graft.ops.Bpe
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 /** Contract for the distributed BPE trainer: semantics match an
   * INDEPENDENT in-memory reference implementation (Sennrich-style:
@@ -129,14 +132,20 @@ class BpeSpec extends SparkSpec {
       Seq("the quick brown fox jumps over the lazy dog",
         "pack my box with five dozen liquor jugs",
         "the five boxing wizards jump quickly"))
-    for (texts <- corpora) {
-      val docs = texts.toDF("text")
-      val seq8 = Bpe.train(docs, "text", 12)
-      for (m <- Seq(1, 2, 4, 32)) {
-        val bat8 = Bpe.trainBatched(docs, "text", 12, batchM = m)
-        assert(bat8 == seq8,
-          s"batchM=$m diverged on $texts:\nbatched $bat8\nsequential $seq8")
+    // each corpus's five trainings are a chain of tiny jobs, so the three
+    // corpora run concurrently on the shared session
+    val runs = corpora.map { texts =>
+      Future {
+        val docs = texts.toDF("text")
+        val seq8 = Bpe.train(docs, "text", 12)
+        (texts, seq8,
+          Seq(1, 2, 4, 32).map(m => m -> Bpe.trainBatched(docs, "text", 12, batchM = m)))
       }
+    }
+    for ((texts, seq8, batched) <- Await.result(Future.sequence(runs), 10.minutes);
+         (m, bat8) <- batched) {
+      assert(bat8 == seq8,
+        s"batchM=$m diverged on $texts:\nbatched $bat8\nsequential $seq8")
     }
   }
 

@@ -4,25 +4,35 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  CommitLog, CommitMetadata, FileContextBasedCheckpointFileManager}
 
-import graft.streaming.NioCheckpointFileManager
+/** Protocol pins for the checkpoint manager every stream runs on:
+  * Spark's FileContext-based manager over the engine's local filesystem.
+  * These are the properties the streaming WAL/state-store machinery relies
+  * on (atomic visibility, concurrent-writer detection via
+  * FileAlreadyExistsException, cancel leaving nothing behind, Hadoop
+  * list/open/delete semantics). */
+class CheckpointFileManagerSpec extends SparkSpec {
 
-/** Protocol pins for the nio checkpoint manager: the properties the
-  * streaming WAL/state-store machinery relies on (atomic visibility,
-  * concurrent-writer detection via FileAlreadyExistsException, cancel
-  * leaving nothing behind, Hadoop-compatible list/open/delete). */
-class NioCheckpointFileManagerSpec extends AnyFunSuite {
-
-  private def withManager(test: (NioCheckpointFileManager, java.io.File) => Unit): Unit = {
-    val dir = Files.createTempDirectory("nio_cfm_spec_").toFile
-    try test(new NioCheckpointFileManager(new Path(dir.getAbsolutePath), new Configuration()), dir)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  private def withManager(test: (CheckpointFileManager, java.io.File) => Unit): Unit = {
+    val dir = new java.io.File(tmpDir("cfm_spec_"))
+    val fm = CheckpointFileManager.create(new Path(dir.getAbsolutePath), new Configuration())
+    // create() falls back to the FileSystem-based manager, with a warning,
+    // when FileContext cannot serve the scheme
+    assert(fm.isInstanceOf[FileContextBasedCheckpointFileManager],
+      s"expected the FileContext manager, got ${fm.getClass.getName}")
+    test(fm, dir)
   }
 
   test("createAtomic: file invisible until close, bytes exact after") {
     withManager { (fm, dir) =>
       val p = new Path(s"${dir.getAbsolutePath}/offsets/0")
+      // Spark's manager creates no parent dirs: its logs mkdirs first
+      intercept[java.io.FileNotFoundException] {
+        fm.createAtomic(p, overwriteIfPossible = false)
+      }
+      fm.mkdirs(p.getParent)
       val out = fm.createAtomic(p, overwriteIfPossible = false)
       out.write("v1\nbatch0".getBytes("UTF-8"))
       assert(!fm.exists(p), "final path must not exist before close")
@@ -33,7 +43,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
       in.readFully(0L, bytes)
       in.close()
       assert(new String(bytes, "UTF-8") == "v1\nbatch0")
-      // no temp-file litter in the parent
+      // no temp-file or .crc litter in the parent
       val names = new java.io.File(dir, "offsets").list().toSeq
       assert(names == Seq("0"), s"unexpected litter: $names")
     }
@@ -41,25 +51,32 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
 
   test("createAtomic without overwrite throws Hadoop FileAlreadyExists on a taken path") {
     withManager { (fm, dir) =>
+      val log = new CommitLog(spark, s"${dir.getAbsolutePath}/commits")
+      assert(log.add(7, CommitMetadata(nextBatchWatermarkMs = 1234L)))
       val p = new Path(s"${dir.getAbsolutePath}/commits/7")
-      val first = fm.createAtomic(p, overwriteIfPossible = false)
-      first.write(1); first.close()
-      val second = fm.createAtomic(p, overwriteIfPossible = false)
-      second.write(2)
+      val loser = fm.createAtomic(p, overwriteIfPossible = false)
+      loser.write(2)
       intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
-        second.close()
+        loser.close()
       }
-      // the loser's temp must be cleaned up and the winner's bytes kept
-      assert(new java.io.File(dir, "commits").list().toSeq == Seq("7"))
-      val in = fm.open(p)
-      assert(in.read() == 1)
-      in.close()
+      // Spark's manager leaves the loser's hidden temp file behind; the
+      // metadata log's batch-file filter must not see it, and the winner's
+      // bytes stay
+      val names = new java.io.File(dir, "commits").list().toSeq.sorted
+      assert(names.size == 2 && names.head.startsWith(".7.") &&
+        names.head.endsWith(".tmp") && names(1) == "7", s"commits dir: $names")
+      assert(log.getLatestBatchId().contains(7L))
+      assert(log.get(None, None).map { case (id, c) => id -> c.nextBatchWatermarkMs }
+        .toSeq == Seq(7L -> 1234L))
     }
   }
 
-  test("createAtomic with overwrite replaces atomically") {
+  // on a local path FileContext overwrites by delete-then-rename, so a
+  // reader can see no file between the two; the bytes are what is pinned
+  test("createAtomic with overwrite replaces the previous bytes") {
     withManager { (fm, dir) =>
       val p = new Path(s"${dir.getAbsolutePath}/state/1.delta")
+      fm.mkdirs(p.getParent)
       val a = fm.createAtomic(p, overwriteIfPossible = true)
       a.write(10); a.close()
       val b = fm.createAtomic(p, overwriteIfPossible = true)
@@ -67,12 +84,14 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
       val in = fm.open(p)
       assert(in.read() == 20)
       in.close()
+      assert(new java.io.File(dir, "state").list().toSeq == Seq("1.delta"))
     }
   }
 
   test("cancel leaves no final file and no temp litter") {
     withManager { (fm, dir) =>
       val p = new Path(s"${dir.getAbsolutePath}/offsets/9")
+      fm.mkdirs(p.getParent)
       val out = fm.createAtomic(p, overwriteIfPossible = false)
       out.write(42)
       out.cancel()
@@ -100,7 +119,7 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     }
   }
 
-  test("delete is recursive and idempotent; non-local paths are refused") {
+  test("delete is recursive and idempotent") {
     withManager { (fm, dir) =>
       fm.mkdirs(new Path(s"${dir.getAbsolutePath}/state/0"))
       Files.write(Paths.get(dir.getAbsolutePath, "state", "0", "1.delta"),
@@ -108,9 +127,6 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
       fm.delete(new Path(s"${dir.getAbsolutePath}/state"))
       assert(!fm.exists(new Path(s"${dir.getAbsolutePath}/state")))
       fm.delete(new Path(s"${dir.getAbsolutePath}/state")) // absent: no-op
-      intercept[IllegalArgumentException] {
-        new NioCheckpointFileManager(new Path("hdfs://nn/ckpt"), new Configuration())
-      }
     }
   }
 }

@@ -206,12 +206,10 @@ class StreamingSemanticsSpec extends SparkSpec {
     val sfDir = "/root/testdata/sf0.001"
     val providerKey = StreamOps.RocksDbProviderConf._1
     val partsKey = "spark.sql.shuffle.partitions"
-    val cfmKey = "spark.sql.streaming.checkpointFileManagerClass"
     // the key resolves to the HDFS-backed default when never set — record
     // whatever the session shows now and require it back afterwards
     val before = spark.conf.getOption(providerKey)
     assert(!before.exists(_.contains("RocksDB")), "precondition: not already RocksDB")
-    assert(spark.conf.getOption(cfmKey).isEmpty, "precondition: no checkpoint manager set")
     // the session already runs at the short-run width of 4, which would
     // hide a leaked width: run the streams at another one
     val sessionParts = spark.conf.get(partsKey)
@@ -222,7 +220,6 @@ class StreamingSemanticsSpec extends SparkSpec {
       assert(spark.conf.getOption(providerKey) == before,
         s"stateStoreProvider leaked out of $after")
       assert(spark.conf.get(partsKey) == "7", s"shuffle partitions leaked out of $after")
-      assert(spark.conf.getOption(cfmKey).isEmpty, s"checkpoint manager leaked out of $after")
     }
     try {
       def agg = StreamOps.eventsStream(spark, sfDir)
